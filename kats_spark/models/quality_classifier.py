@@ -24,9 +24,13 @@ normal, because those n-grams co-occurred with heuristic-flagged docs in
 training.  That generalization is the measured contract
 (tests/test_ml.py::test_quality_classifier_beats_heuristic_auc).
 
-Scale: HashingTF + LR scale linearly and shuffle only MLlib's own
-treeAggregate reductions; scoring is map-only codegen + one UDF-free
-transform.  Rows-only query (iterative L-BFGS has no SQL form).
+Scale: every per-document signal (tokens, quality_score, the Gopher
+repetition ratios) is a row-local expression, so the feature frame is
+one projection of the corpus with no shuffle and no join.  HashingTF +
+LR scale linearly and shuffle only MLlib's own treeAggregate
+reductions; scoring is ``model.transform`` plus one projection — on a
+model-memo hit the whole call is map-only.  Rows-only query (iterative
+L-BFGS has no SQL form).
 """
 
 from __future__ import annotations
@@ -38,20 +42,38 @@ from pyspark.sql import functions as F
 def quality_feature_frame(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """id + tokenized words + the dense heuristic signals used both for
-    weak labeling and as dense features: quality_score (blend of length
-    band / stopword ratio / alpha ratio / distinct ratio) and Gopher
-    repetition ratios."""
+    """(id, __words, quality_score, dup_line_ratio, top_gram_share,
+    dup_gram_ratio): the tokenized words the classifier learns from and
+    the heuristic signals that define the weak labels — quality_score
+    (blend of length band / stopword ratio / alpha ratio / distinct
+    ratio) and the Gopher repetition ratios.  One projection per
+    document: quality_score, then the repetition stats, then the
+    words."""
     from kats_spark.operators.sampling import repetition_stats
     from kats_spark.operators.text import quality_score, tokens
 
-    q = quality_score(df, text_col=text_col).select(
+    rep = repetition_stats(
+        quality_score(df, text_col=text_col),
+        text_col=text_col,
+        id_col=id_col,
+        keep=("quality_score", text_col),
+    )
+    return rep.select(
         id_col,
         tokens(F.lower(F.col(text_col))).alias("__words"),
         "quality_score",
+        "dup_line_ratio",
+        "top_gram_share",
+        "dup_gram_ratio",
     )
-    rep = repetition_stats(df, text_col=text_col, id_col=id_col)
-    return q.join(rep, id_col)
+
+
+def _weak_label(hi: float = 0.55, lo: float = 0.45, max_dup_gram: float = 0.5):
+    """Nullable int weak label: 1 confident-good, 0 confident-bad, NULL
+    for the ambiguous middle band."""
+    good = (F.col("quality_score") >= hi) & (F.col("dup_gram_ratio") <= max_dup_gram)
+    bad = (F.col("quality_score") <= lo) | (F.col("dup_gram_ratio") > max_dup_gram)
+    return F.when(good, F.lit(1)).when(bad, F.lit(0))
 
 
 def weak_labels(
@@ -64,12 +86,9 @@ def weak_labels(
     hi AND low repetition) get label 1, confident-bad (score <= lo OR
     heavy repetition) get 0, the ambiguous middle band is DROPPED — the
     standard trick that trades coverage for label precision."""
-    good = (F.col("quality_score") >= hi) & (F.col("dup_gram_ratio") <= max_dup_gram)
-    bad = (F.col("quality_score") <= lo) | (F.col("dup_gram_ratio") > max_dup_gram)
     return (
         feats.withColumn(
-            "weak_label",
-            F.when(good, F.lit(1.0)).when(bad, F.lit(0.0)),
+            "weak_label", _weak_label(hi, lo, max_dup_gram).cast("double")
         )
         .filter(F.col("weak_label").isNotNull())
     )
@@ -116,13 +135,16 @@ def train_quality_classifier(
 def score_quality(
     model, feats: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Score every document: (id, p_good) — the probability of the
-    positive (high-quality) class."""
+    """Score every document of a ``quality_feature_frame``: (id,
+    weak_label nullable, p_good) — p_good is the probability of the
+    positive (high-quality) class.  One projection over
+    ``model.transform``: the heuristic columns ride along with the
+    words, so no join is needed."""
     from pyspark.ml.functions import vector_to_array
 
-    scored = model.transform(feats)
-    return scored.select(
+    return model.transform(feats).select(
         id_col,
+        _weak_label().cast("int").alias("weak_label"),
         F.element_at(vector_to_array("probability"), 2).alias("p_good"),
     )
 
@@ -135,23 +157,6 @@ def score_quality(
 # to a fresh fit (pinned in tests/test_ml.py) — and the memo dies with
 # the process, so every bench RUN still trains from parquet.
 _MODEL_MEMO: dict = {}
-
-
-def _weak_label_col(id_col: str) -> "list":
-    """The nullable weak-label output projection (shared by the fresh
-    and memo-hit paths so both emit the identical column)."""
-    return [
-        F.when(
-            (F.col("quality_score") >= 0.55) & (F.col("dup_gram_ratio") <= 0.5),
-            F.lit(1),
-        )
-        .when(
-            (F.col("quality_score") <= 0.45) | (F.col("dup_gram_ratio") > 0.5),
-            F.lit(0),
-        )
-        .cast("int")
-        .alias("weak_label"),
-    ]
 
 
 def quality_classifier_scores(
@@ -169,10 +174,12 @@ def quality_classifier_scores(
     (id, weak_label nullable, p_good).
 
     ``memo_key``: callers that declare the corpus immutable for the
-    session pass an identity tuple to reuse the fitted pipeline across
-    calls (see ``_MODEL_MEMO``)."""
-    from kats_spark.operators.text import tokens
+    session pass an identity tuple — ideally a content fingerprint of
+    the source — to reuse the fitted pipeline across calls (see
+    ``_MODEL_MEMO``)."""
+    from kats_spark.models.fit_input import compact_fit_input
 
+    feats = quality_feature_frame(df, text_col=text_col, id_col=id_col)
     key = None
     if memo_key is not None:
         sc = df.sparkSession.sparkContext
@@ -180,49 +187,20 @@ def quality_classifier_scores(
                seed, memo_key)
         model = _MODEL_MEMO.get(key)
         if model is not None:
-            # steady-state scoring: transform + the heuristic label
-            # projection are pure plans — no persists needed (each frame
-            # has one consumer on this path)
-            words = df.select(id_col, tokens(F.lower(F.col(text_col))).alias("__words"))
-            scored = score_quality(model, words, id_col=id_col)
-            lab = quality_feature_frame(df, text_col=text_col, id_col=id_col).select(
-                id_col, *_weak_label_col(id_col)
-            )
-            return scored.join(lab, id_col)
+            # steady-state scoring: one map-only projection, no shuffle
+            return score_quality(model, feats, id_col=id_col)
 
-    feats = quality_feature_frame(df, text_col=text_col, id_col=id_col)
-    # persist ONLY the narrow heuristic columns (id + a few doubles).
-    # Caching the tokenized __words array column looks harmless but costs
-    # ~10x the whole query: the in-memory columnar store serializes every
-    # string array element-by-element (measured 7.4 s vs 0.8 s for the
-    # uncached frame at sf0.1).  Tokens are cheap codegen — recompute them
-    # per consumer instead; MLlib's own internal persistence covers the
-    # L-BFGS iterations.
-    from kats_spark.models.fit_input import compact_fit_input
-
-    small = feats.drop("__words").persist()
-    words = df.select(id_col, tokens(F.lower(F.col(text_col))).alias("__words"))
-    try:
-        # compact the weak-labeled training frame before the L-BFGS loop:
-        # ~25 gradient jobs each read it, and at training-subset size the
-        # shuffle-partition layout is nearly all empty-task overhead
-        # (fit 5-8s -> ~2s at sf0.1; p_good BIT-identical — see
-        # models/fit_input.py)
-        labeled = compact_fit_input(weak_labels(small).join(words, id_col))
-        model = train_quality_classifier(
-            labeled, n_hash_features=n_hash_features, max_iter=max_iter
-        )
-        if key is not None:
-            if len(_MODEL_MEMO) > 64:  # dead-gateway hygiene
-                _MODEL_MEMO.clear()
-            _MODEL_MEMO[key] = model
-        scored = score_quality(model, words, id_col=id_col)
-        lab = small.select(id_col, *_weak_label_col(id_col))
-        out = scored.join(lab, id_col).persist()
-        # materialize before unpersisting the shared upstream —
-        # persist+count, not an eager localCheckpoint, so the scored
-        # plan is not converted to an RDD at call time (planning cost)
-        out.count()
-        return out
-    finally:
-        small.unpersist()
+    # compact the weak-labeled training frame before the L-BFGS loop:
+    # ~25 gradient jobs each read it, and at training-subset size the
+    # shuffle-partition layout is nearly all empty-task overhead
+    # (fit 5-8s -> ~2s at sf0.1; p_good BIT-identical — see
+    # models/fit_input.py)
+    labeled = compact_fit_input(weak_labels(feats))
+    model = train_quality_classifier(
+        labeled, n_hash_features=n_hash_features, max_iter=max_iter
+    )
+    if key is not None:
+        if len(_MODEL_MEMO) > 64:  # dead-gateway hygiene
+            _MODEL_MEMO.clear()
+        _MODEL_MEMO[key] = model
+    return score_quality(model, feats, id_col=id_col)

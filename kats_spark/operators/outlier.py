@@ -5,8 +5,9 @@ decompose (additive or multiplicative), take residuals, flag points whose
 residual is outside [Q1 - iqr_mult*IQR, Q3 + iqr_mult*IQR] (default
 iqr_mult=3).  The reference runs statsmodels seasonal_decompose on one
 series; here the decomposition is the pure-window MA decompose and the IQR
-gate is two exact percentiles per series — fully expression-based, one
-shuffle, DuckDB-oracle-checkable.
+gate is two exact percentiles per series, taken as window aggregates over
+the decomposition's own series partitioning — fully expression-based,
+one shuffle, DuckDB-oracle-checkable.
 
 Also ``outlier_remove`` — the ``remover`` interpolation path
 (kats/detectors/detector.py:101): replace flagged points with NULL and
@@ -15,7 +16,7 @@ optionally linear-interpolate via the resample operator.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kats_spark.operators.decomposition import decompose
@@ -34,27 +35,30 @@ def outlier_detect(
     runs the IQR rule on loess-STL residuals (the reference
     OutlierDetector's decomposition backend)."""
     dec = decompose(df, period, model, method, s)
-    bounds = (
-        dec.filter(F.col("residual").isNotNull())
-        .groupBy(s.series_id)
-        .agg(
-            F.percentile(F.col("residual"), F.lit(0.25)).alias("__q1"),
-            F.percentile(F.col("residual"), F.lit(0.75)).alias("__q3"),
-        )
-    )
-    iqr = F.col("__q3") - F.col("__q1")
-    lo = F.col("__q1") - iqr_mult * iqr
-    hi = F.col("__q3") + iqr_mult * iqr
+    # IQR bounds as whole-series window aggregates: ``dec`` is already
+    # partitioned by series_id, so the window adds no exchange (the
+    # groupBy + broadcast join back it replaces cost a second job).
+    # percentile skips NULL residuals, like the filtered groupBy did.
+    w = Window.partitionBy(s.series_id)
+    res = F.col("residual")
+    q1, q3 = F.col("__q1"), F.col("__q3")
+    iqr = q3 - q1
     return (
-        dec.join(F.broadcast(bounds), s.series_id)
-        .withColumn(
-            "is_outlier",
-            F.when(
-                F.col("residual").isNotNull(),
-                ((F.col("residual") < lo) | (F.col("residual") > hi)).cast("int"),
-            ).otherwise(F.lit(0)),
+        dec.select(
+            s.series_id, s.time, s.value, "residual",
+            F.percentile(res, F.lit(0.25)).over(w).alias("__q1"),
+            F.percentile(res, F.lit(0.75)).over(w).alias("__q3"),
         )
-        .select(s.series_id, s.time, s.value, "residual", "is_outlier")
+        # a series without one residual has no bounds: dropped, as the
+        # inner join against the per-series bounds did
+        .filter(q1.isNotNull())
+        .select(
+            s.series_id, s.time, s.value, "residual",
+            F.when(
+                res.isNotNull(),
+                ((res < q1 - iqr_mult * iqr) | (res > q3 + iqr_mult * iqr)).cast("int"),
+            ).otherwise(F.lit(0)).alias("is_outlier"),
+        )
     )
 
 

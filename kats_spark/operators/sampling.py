@@ -9,6 +9,8 @@ over the same snapshot reproduces the exact same training set.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -245,6 +247,7 @@ def repetition_stats(
     shingle_n: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
+    keep: Sequence[str] = (),
 ) -> DataFrame:
     """Intra-document repetition features (the Gopher/MassiveText-style
     repetition filters, public methodology): per document
@@ -254,71 +257,81 @@ def repetition_stats(
       ``shingle_n``-gram over total gram count;
     - ``dup_gram_ratio``: fraction of gram OCCURRENCES whose gram appears
       more than once.
-    One explode + two grouped aggregations, all counting — exact oracle."""
+    Output (id, *keep, the three ratios), one row per input row.
+
+    A document is one row, so every statistic is a row-local array
+    expression — no explode, no shuffle, no join.  Three projections:
+
+    1. stage the non-blank lines and the normalized token array as bound
+       columns (each statistic then reads them without re-tokenizing);
+    2. build the grams as ``zip_with`` over shifted ``slice``s of the
+       token array and sort them;
+    3. one ``aggregate`` over the sorted grams counts runs of equal
+       grams: the longest run is the top gram's count, and every
+       occurrence in a run of length > 1 is a duplicated occurrence.
+
+    The lambdas touch only their own arguments (never a computed array),
+    so the per-element inlining trap of HOFs cannot occur.  A document
+    shorter than ``shingle_n`` tokens has one partial gram (all its
+    tokens); a zero-token document has one empty gram (share 1.0,
+    dup 0.0).  All counting — exact oracle."""
     from kats_spark.operators.dedup import normalize
 
-    lines = df.select(
+    n = int(shingle_n)
+    text = F.coalesce(F.col(text_col), F.lit(""))
+    staged = df.select(
         F.col(id_col),
-        F.explode(F.split(F.col(text_col), "\n")).alias("__line"),
-    ).filter(F.trim("__line") != "")
-    line_stats = (
-        lines.groupBy(id_col, "__line")
-        .agg(F.count("*").alias("__c"))
-        .groupBy(id_col)
-        .agg(
-            (
-                1.0
-                - F.count("*").cast("double") / F.sum("__c")
-            ).alias("dup_line_ratio")
-        )
+        *keep,
+        F.filter(F.split(text, "\n"), lambda ln: F.trim(ln) != "").alias("__lines"),
+        tokens(normalize(text)).alias("__toks"),
     )
-    # ROW-BASED gram builder (same plan shape as dedup.shingle_rows): a
-    # lambda that slices a computed token array re-evaluates the tokenizer
-    # PER GRAM (HOFs are excluded from common-subexpression elimination and
-    # the array expression inlines into the lambda body) — the array
-    # version was O(tokens²) per document and 7x this whole operator's
-    # cost.  posexplode tokenizes once per token; the n-gram combine is
-    # lead() over the (id, pos) window; concat_ws skips the null leads so
-    # a document shorter than shingle_n keeps its single partial gram at
-    # pos 0, exactly like the truncated array slice did.
-    from pyspark.sql import Window
+    t = F.col("__toks")
+    m = F.size(t) - (n - 1)  # number of full grams
+    width = F.greatest(m, F.lit(0))
+    grams = F.slice(t, 1, width)
+    for j in range(1, n):
+        grams = F.zip_with(
+            grams, F.slice(t, 1 + j, width), lambda a, b: F.concat_ws(" ", a, b)
+        )
+    grams = F.when(m > 0, grams).otherwise(F.array(F.array_join(t, " ")))
 
-    t = tokens(normalize(F.col(text_col)))
-    tok = df.select(F.col(id_col), F.posexplode(t).alias("__pos", "__tok"))
-    w = Window.partitionBy(id_col).orderBy("__pos")
-    parts = [F.col("__tok")] + [
-        F.lead("__tok", j).over(w) for j in range(1, shingle_n)
-    ]
-    cnt = F.count("*").over(Window.partitionBy(id_col))
-    g = (
-        tok.withColumn("__g", F.concat_ws(" ", *parts))
-        .withColumn("__n_tok", cnt)
-        .filter(
-            (F.col("__pos") <= F.col("__n_tok") - shingle_n)
-            | (F.col("__pos") == 0)
-        )
-    )
-    gram_stats = (
-        g.groupBy(id_col, "__g")
-        .agg(F.count("*").alias("__c"))
-        .groupBy(id_col)
-        .agg(
-            (F.max("__c") / F.sum("__c")).alias("top_gram_share"),
+    def step(acc: Column, g: Column) -> Column:
+        run = F.when(acc["g"] == g, acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            g.alias("g"),
+            run.alias("run"),
+            (acc["n"] + 1).alias("n"),
+            F.greatest(acc["top"], run).alias("top"),
             (
-                F.sum(F.when(F.col("__c") > 1, F.col("__c")).otherwise(0))
-                / F.sum("__c")
-            ).alias("dup_gram_ratio"),
+                acc["dup"]
+                + F.when(run == 2, F.lit(2)).when(run > 2, F.lit(1)).otherwise(F.lit(0))
+            ).alias("dup"),
         )
+
+    zero = F.struct(
+        F.lit(None).cast("string").alias("g"),
+        *[F.lit(0).alias(c) for c in ("run", "n", "top", "dup")],
     )
-    ids = df.select(id_col)
-    return (
-        ids.join(line_stats, id_col, "left")
-        .join(gram_stats, id_col, "left")
-        # zero-token docs have no gram rows; the array builder gave them
-        # one empty gram -> share 1.0, dup 0.0 — reproduce that here
-        .fillna(
-            {"dup_line_ratio": 0.0, "top_gram_share": 1.0, "dup_gram_ratio": 0.0}
+    lines = F.col("__lines")
+    n_lines = F.size(lines)
+    runs = staged.select(
+        F.col(id_col),
+        *keep,
+        F.when(
+            n_lines > 0,
+            1.0 - F.size(F.array_distinct(lines)).cast("double") / n_lines,
         )
+        .otherwise(F.lit(0.0))
+        .alias("dup_line_ratio"),
+        F.aggregate(F.array_sort(grams), zero, step).alias("__runs"),
+    )
+    r = F.col("__runs")
+    return runs.select(
+        F.col(id_col),
+        *keep,
+        "dup_line_ratio",
+        (r["top"] / r["n"]).alias("top_gram_share"),
+        (r["dup"] / r["n"]).alias("dup_gram_ratio"),
     )
 
 

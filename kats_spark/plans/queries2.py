@@ -3927,12 +3927,17 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iterative L-BFGS -> rows-only; the AUC-beats-heuristic contract is
     tests/test_ml.py::test_quality_classifier_beats_heuristic_auc."""
     from kats_spark.models.quality_classifier import quality_classifier_scores
+    from kats_spark.sources.ann_store import source_fingerprint
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    src = f"{sf_dir}/documents.parquet"
+    docs = spark.read.parquet(src).select("doc_id", "text")
     # memo_key: first call trains, later calls measure the standing
     # classifier's scoring plan (the r08/r14 amortization contract;
-    # memo-hit == fresh bit-identity pinned in tests/test_ml.py)
-    out = quality_classifier_scores(docs, memo_key=(sf_dir,))
+    # memo-hit == fresh bit-identity pinned in tests/test_ml.py).  Keyed
+    # on the source's CONTENT (parquet footers, no Spark job), so data
+    # rewritten under the same path retrains instead of reusing a model
+    # fitted on the old corpus.
+    out = quality_classifier_scores(docs, memo_key=(source_fingerprint(src),))
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("weak_label").cast("int").alias("weak_label"),

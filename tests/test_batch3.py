@@ -1051,6 +1051,84 @@ def test_repetition_stats_scores_repetitive_doc(spark):
     assert out.loc[2, "top_gram_share"] < 0.2
 
 
+_REP_EDGE_TEXTS = [
+    "", "   ", "word", "\n\n\n", "a b\n\na b\n  \nc", "x x x x x x",
+    "one two three one two three one two", "a\tb\n a\tb\n", None,
+    "Hello  WORLD\thello world", "l1\nl1\nl1\nl2",
+]
+
+
+def _repetition_reference(text, n):
+    """Pure-Python repetition stats: the Counter definition of each
+    ratio, with the operator's tokenization (Java ``\\s`` whitespace,
+    space-only ``trim`` for blank lines)."""
+    import re
+    from collections import Counter
+
+    text = text or ""
+    lines = [ln for ln in text.split("\n") if ln.strip(" ") != ""]
+    dup_line = 1.0 - len(set(lines)) / len(lines) if lines else 0.0
+    ws = "[ \t\n\x0b\f\r]+"
+    norm = re.sub(ws, " ", text.strip(" ")).lower().strip(" ")
+    toks = [t for t in re.split(ws, norm) if t != ""]
+    if len(toks) >= n:
+        grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+    else:
+        grams = [" ".join(toks)]
+    c = Counter(grams)
+    return (
+        dup_line,
+        max(c.values()) / len(grams),
+        sum(v for v in c.values() if v > 1) / len(grams),
+    )
+
+
+def test_repetition_stats_edge_cases_match_counter_reference(spark):
+    """Empty, whitespace-only, one-token, blank-line, repeated-line and
+    NULL documents, for shingle_n 1-3: every ratio equals the Counter
+    reference exactly (all three are ratios of small integers)."""
+    from kats_spark.operators.sampling import repetition_stats
+
+    pdf = pd.DataFrame(
+        {"doc_id": range(len(_REP_EDGE_TEXTS)), "text": _REP_EDGE_TEXTS}
+    )
+    df = spark.createDataFrame(pdf, "doc_id long, text string")
+    for n in (1, 2, 3):
+        got = {
+            r.doc_id: (r.dup_line_ratio, r.top_gram_share, r.dup_gram_ratio)
+            for r in repetition_stats(df, shingle_n=n).collect()
+        }
+        want = {
+            i: _repetition_reference(t, n) for i, t in enumerate(_REP_EDGE_TEXTS)
+        }
+        assert got == want, n
+
+
+def test_repetition_stats_matches_oracle_sf0001(spark, sf_dir):
+    """The declared query against its DuckDB oracle at sf0.001."""
+    from kats_spark.plans.harness import compare, duck_run
+    from kats_spark.plans.pipeline_queries import _Q_REPETITION_SQL, q_repetition_stats
+
+    ok, msg = compare(
+        q_repetition_stats.__wrapped_query__(spark, sf_dir),
+        duck_run(_Q_REPETITION_SQL, sf_dir),
+    )
+    assert ok, msg
+
+
+def test_repetition_stats_plan_has_no_exchange_or_join(spark, sf_dir):
+    """A document is one row: the operator is row-local projections
+    only — no shuffle, no join."""
+    from kats_spark.operators.sampling import repetition_stats
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    out = repetition_stats(docs, shingle_n=2)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
+
+
 def test_unigram_logppl_separates_fluent_from_garbage(spark):
     """The corpus-LM score must rank a rare-token (garbage) document
     above in-domain documents built from common corpus vocabulary."""

@@ -640,3 +640,53 @@ def test_quality_classifier_memo_hit_equals_fresh(spark):
         df, max_iter=5, memo_key=("t",)).collect()))
     assert hit == fresh
     qc._MODEL_MEMO.clear()
+
+
+def test_quality_classifier_memo_hit_plan_is_join_free(spark):
+    """A memo hit scores in one projection over model.transform: the
+    heuristic weak-label columns ride along with the words, so the plan
+    holds no join and no broadcast."""
+    from kats_spark.models import quality_classifier as qc
+
+    df = spark.createDataFrame(
+        _mixed_quality_corpus(n_good=30, n_bad=30)[["doc_id", "text"]]
+    )
+    qc._MODEL_MEMO.clear()
+    qc.quality_classifier_scores(df, max_iter=5, memo_key=("plan",))
+    hit = qc.quality_classifier_scores(df, max_iter=5, memo_key=("plan",))
+    hit.collect()
+    plan = hit._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+    qc._MODEL_MEMO.clear()
+
+
+def test_quality_classifier_query_retrains_on_rewritten_source(spark, tmp_path):
+    """The declared query keys its model memo on the CONTENT of
+    documents.parquet: rewriting the file under the same path within
+    one session must retrain and return the new corpus's scores, not
+    the standing model's."""
+    from kats_spark.models import quality_classifier as qc
+    from kats_spark.plans.queries2 import q_quality_classifier
+
+    src = tmp_path / "documents.parquet"
+
+    def write(pdf):
+        pdf[["doc_id", "text"]].to_parquet(src, index=False)
+
+    def rows():
+        return [tuple(r) for r in q_quality_classifier(spark, str(tmp_path)).collect()]
+
+    old = _mixed_quality_corpus(n_good=40, n_bad=40, seed=11)
+    new = _mixed_quality_corpus(n_good=40, n_bad=40, seed=12)
+    qc._MODEL_MEMO.clear()
+    write(old)
+    first = rows()
+    assert rows() == first  # memo hit on unchanged content
+    write(new)
+    rewritten = rows()
+    qc._MODEL_MEMO.clear()
+    fresh = rows()  # a cold fit on the new corpus
+    assert rewritten == fresh
+    assert rewritten != first
+    qc._MODEL_MEMO.clear()
