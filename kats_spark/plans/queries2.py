@@ -5394,46 +5394,59 @@ WHERE i.t >= 36
 
 
 def q_simulate_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded simulator with the counter-based portable gaussian
-    (simulator.portable_randn): trend + seasonality + level shift + noise,
-    every VALUE replayed exactly by the DuckDB oracle (the affine-mod-p
-    rounds and the Box-Muller transform are plain arithmetic both sides)."""
-    from kats_spark.operators import simulator
+    """Seeded simulator (simulator.simulate, noise from the counter-based
+    simulator.portable_randn): trend + seasonality + level shift + noise,
+    every VALUE replayed exactly by the DuckDB oracle (the mod-p mixing
+    rounds and the Box-Muller transform are plain long/double arithmetic
+    both sides)."""
     from kats_spark.plans.queries import _utc
 
     _utc(spark)
-    out = simulator.simulate_portable(
+    return _fmt_time(_r6(_simulate_q(spark), "value"))
+
+
+def _simulate_q(spark: SparkSession) -> DataFrame:
+    from kats_spark.operators import simulator
+
+    return simulator.simulate(
         spark, n_series=5, n_points=200,
         trend_slope=0.05, noise_std=1.0,
         seasonal_period=24, seasonal_magnitude=3.0,
         level_shift_at=120, level_shift_size=10.0, seed=42,
     )
-    return _fmt_time(_r6(out, "value"))
 
 
 def _simulate_portable_sql(seed: int = 42) -> str:
     import math
-    import random
+
+    from kats_spark.operators.simulator import mix_keys
 
     p = 2147483647
-    rnd = random.Random(seed)
-    a1, b1 = rnd.randrange(1, p), rnd.randrange(0, p)
-    a2, b2 = rnd.randrange(1, p), rnd.randrange(0, p)
+    k0, mults = mix_keys(seed)
     two_pi = repr(2.0 * math.pi)
     season_w = repr(2.0 * math.pi / 24)
+    # one CTE pair per mixing round, as simulator.portable_randn stages
+    # its columns: h = (h * a) % p, then h = h xor (h >> 16)
+    rounds, prev = [], "h0"
+    for j, a in enumerate(mults, 1):
+        rounds.append(
+            f"m{j} AS (SELECT id, (h1 * {a}) % {p} AS h1, (h2 * {a}) % {p} AS h2 FROM {prev}),\n"
+            f"h{j} AS (SELECT id, xor(h1, h1 >> 16) AS h1, xor(h2, h2 >> 16) AS h2 FROM m{j}),"
+        )
+        prev = f"h{j}"
+    rounds = "\n".join(rounds)
     return f"""
 WITH ids AS (SELECT unnest(range(0, 1000)) AS id),
-base AS (
-  SELECT id, (id // 200)::INT AS sid, (id % 200)::INT AS i,
-    (id * {a1} + {b1}) % {p} AS h1
+h0 AS (
+  SELECT id, (2 * id + {k0}) % {p} AS h1, (2 * id + 1 + {k0}) % {p} AS h2
   FROM ids
 ),
-h AS (SELECT *, (h1 * {a2} + {b2}) % {p} AS h2 FROM base),
+{rounds}
 z AS (
-  SELECT sid, i,
+  SELECT (id // 200)::INT AS sid, (id % 200)::INT AS i,
     sqrt(-2.0 * ln((h1 + 1)::DOUBLE / 2147483648.0))
       * cos(((h2 + 1)::DOUBLE / 2147483648.0) * {two_pi}) AS z
-  FROM h
+  FROM {prev}
 )
 SELECT 'sim_' || sid AS series_id,
   strftime(timestamp '2024-01-01' + to_seconds(i * 3600), '{_DK_FMT}') AS time,
@@ -5446,17 +5459,10 @@ FROM z
 def q_simulate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded simulator (simulator.py:48-834: trend/noise/seasonality/
     level-shift injection as expressions over spark.range) — rows-only:
-    ``randn(seed)`` values depend on Spark's partition-seeded PRNG, but the
-    grid shape, schema, and injected deterministic components are stable."""
-    from kats_spark.operators import simulator
-
-    out = simulator.simulate(
-        spark, n_series=5, n_points=200,
-        trend_slope=0.05, noise_std=1.0,
-        seasonal_period=24, seasonal_magnitude=3.0,
-        level_shift_at=120, level_shift_size=10.0, seed=42,
-    )
-    return _fmt_time(out.withColumn("value", F.col("value").cast("double")))
+    the same series as simulate_portable, whose oracle checks the values,
+    kept unrounded here (raw doubles) to exercise the schema and grid
+    shape."""
+    return _fmt_time(_simulate_q(spark).withColumn("value", F.col("value").cast("double")))
 
 
 # --------------------------------------------------------------------------

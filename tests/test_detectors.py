@@ -27,6 +27,43 @@ def test_cusum_no_false_positive_on_noise(spark):
     assert len(cps) == 0
 
 
+
+def test_portable_randn_lags_uncorrelated(spark):
+    """The simulator's counter-based gaussian is noise, not a sequence:
+    for iid data the lag-k sample autocorrelation has SD ~ 1/sqrt(n)
+    (Bartlett), so every |r_k| stays within 4/sqrt(n).  Affine-mod-p
+    counters fail this by two orders of magnitude (|r_k| ~ 0.85)."""
+    import numpy as np
+
+    n = 100_000
+    for seed in (11, 42):
+        z = (
+            simulator.portable_randn(spark.range(n), "id", seed)
+            .select("__z").toPandas()["__z"].to_numpy()
+        )
+        z = z - z.mean()
+        r = [np.dot(z[:-k], z[k:]) / np.dot(z, z) for k in range(1, 25)]
+        assert max(map(abs, r)) <= 4 / np.sqrt(n), (seed, r)
+
+
+def test_simulate_same_draw_at_any_partition_count(spark, monkeypatch):
+    """Each value depends only on (seed, row id): the draw is identical
+    whatever the partition count of spark.range.  PySpark's range takes
+    that count from SparkContext.defaultParallelism (the N of local[N]),
+    not from spark.sql.leafNodeDefaultParallelism, so that is what varies."""
+    runs = []
+    for parts in (1, 7):
+        monkeypatch.setattr(
+            type(spark.sparkContext), "defaultParallelism", property(lambda sc: parts)
+        )
+        df = simulator.simulate(
+            spark, n_series=3, n_points=200, noise_std=1.0,
+            seasonal_period=24, seasonal_magnitude=2.0, seed=11,
+        )
+        assert df.rdd.getNumPartitions() == parts
+        runs.append(sorted(map(tuple, df.collect())))
+    assert runs[0] == runs[1]
+
 def test_statsig_scores_spike_at_shift(spark):
     df = simulator.simulate(
         spark, n_series=1, n_points=300, noise_std=1.0,
