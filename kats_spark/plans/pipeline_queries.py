@@ -17,6 +17,7 @@ from kats_spark.operators import dedup, similarity, text
 from kats_spark.operators.sampling import salted_cumsum
 from kats_spark.plans import eig_oracle as _EIG_ORACLE
 from kats_spark.plans.prepared import prepared
+from kats_spark.sources.load import read_parquet
 
 
 def _rnd(col, d=6):
@@ -34,7 +35,7 @@ def _rnd(col, d=6):
 
 @prepared()
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = dedup.exact_dedup(docs)
     return out.select(F.col("doc_id").cast("bigint").alias("doc_id"), "lang", "source")
 
@@ -53,7 +54,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (threshold 0.5) via the
     prefix-filtered AllPairs plan (dedup.jaccard_allpairs) — identical
     result set to the naive shared-shingle join, near-linear candidates."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = dedup.jaccard_allpairs(docs, shingle_n=3, threshold=0.5)
     return out.select(
         F.col("id_a").cast("bigint").alias("id_a"),
@@ -94,7 +95,7 @@ WHERE inter / (sz_a + sz_b - inter) >= 0.5
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs — approximate (Spark xxhash64-based), so
     declared rows-only (no SQL oracle can reproduce the hash family)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return dedup.minhash_lsh_pairs(docs, num_hashes=64, bands=16).select(
         F.col("id_a").cast("bigint").alias("id_a"),
         F.col("id_b").cast("bigint").alias("id_b"),
@@ -103,7 +104,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprints — rows-only (hash-family dependent)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return dedup.simhash(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "simhash"
     )
@@ -115,7 +116,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @prepared()
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = text.word_stats(docs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -140,7 +141,7 @@ FROM toks
 
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = text.lang_id(text.quality_score(docs))
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -195,7 +196,7 @@ def q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern, lookahead-free so RE2 replays it) beside whitespace counts,
     plus chars-per-token — the compression-rate proxy used to budget
     training corpora."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = docs.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.length("text").cast("bigint").alias("n_chars"),
@@ -215,7 +216,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules are pure column expressions; exact oracle."""
     from kats_spark.operators.text import gopher_rules
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = gopher_rules(docs)
     cols = ["r_wordcount", "r_meanlen", "r_symbol", "r_bullet", "r_alpha",
             "r_stop", "gopher_pass"]
@@ -355,7 +356,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end."""
     from kats_spark.operators.bpe import bpe_train
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return bpe_train(docs, num_merges=20).orderBy("rank")
 
 
@@ -377,7 +378,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluated once per DISTINCT (doc, word); exact oracle."""
     from kats_spark.operators.bpe import bpe_encode_stats
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = bpe_encode_stats(docs, _BPE_MERGES)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -442,7 +443,7 @@ def q_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     BPE-token totals, and the group's share of corpus tokens — the
     data-mixture accounting every pretraining run starts from.  One scan,
     one partial-aggregating groupBy, one scalar broadcast for the share."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     per = docs.groupBy("source", "lang").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum(text.bpe_token_count(F.col("text"))).cast("bigint").alias("n_tokens"),
@@ -481,7 +482,7 @@ def q_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     above exact-hash fingerprints.  Long grams fit this vocabulary-dense
     corpus: k=5 collapsed to 59 global minima (measured), k=20 yields
     ~7.4k distinct fingerprints with max document frequency 5."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = text.winnow_fingerprints(docs, k=20, w=32)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -529,7 +530,7 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-join (the document-frequency cap that keeps boilerplate
     phrases from going quadratic — same discipline as AllPairs prefix
     filtering); pairs sharing >= 5 rare fingerprints are reported."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     # persist the fingerprint set: it feeds the document-frequency agg
     # AND (through ``rare``) BOTH sides of the overlap self-join — without
     # the boundary the whole winnowing pipeline (char-gram rolling hash +
@@ -577,7 +578,7 @@ def q_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-20 vs the vec_id=0 embedding (exact ANN
     baseline).  Joins the single query row via crossJoin-broadcast — the
     scan side never shuffles."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("__q"))
     scored = (
         emb.filter(F.col("vec_id") != 0)
@@ -612,7 +613,7 @@ def q_allpairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     immutable embeddings parquet) is memoized per (gateway, sf_dir) —
     the prepared-statement pattern applied to the one driver-side cost
     this query has (VERDICT r07 item #4)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     return similarity.all_pairs_topk(emb, k=3, memo_key=f"allpairs:{sf_dir}")
 
 
@@ -642,7 +643,7 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     per source vector, hubness-corrected by both sides' kNN averages —
     label 0 plays the source language, label 1 the target.  Exact
     oracle (selection ranks on the rounded margin)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     out = similarity.bitext_margin_pairs(
         emb.filter(F.col("label") == 0),
         emb.filter(F.col("label") == 1),
@@ -700,7 +701,7 @@ def q_bitext_mine_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     The whole pipeline — subset-seeded IVF build, probe ranking,
     candidate equi-join, margin selection — replays exactly in DuckDB.
     At n_probe == n_cells the output equals ``bitext_mine`` (tested)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"), "label"
     )
     out = similarity.bitext_margin_pairs_ann(
@@ -826,7 +827,7 @@ def q_bitext_mine_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark-warehouse",
         f"bitext_target_{sf_name}",
     )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"), "label"
     )
     fp = source_fingerprint(f"{sf_dir}/embeddings.parquet")
@@ -852,7 +853,7 @@ def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted-exact cumsum.  Exact oracle."""
     from kats_spark.operators.sampling import assign_shards
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = assign_shards(docs, shard_tokens=2000, seed=5)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -887,7 +888,7 @@ def q_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(x+0.5) rounding so both engines agree on half-integers;
     long-format output for exact value-hash.  Pure projection —
     exact oracle."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     out = similarity.quantize_int8_rows(emb.filter(F.col("vec_id") < 100))
     return out.select(
         F.col("vec_id").cast("bigint").alias("vec_id"),
@@ -923,7 +924,7 @@ def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side literals baked into the plan, so the EXACT same constants
     are inlined into the oracle SQL — full value-hash check, no PRNG
     parity required (see ``_lsh_bucket_sql``)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     return similarity.lsh_bucket_pairs(emb, num_planes=8, dim=64).select(
         F.col("bucket").cast("int").alias("bucket"),
         F.col("id_a").cast("bigint").alias("id_a"),
@@ -957,7 +958,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4 bands x 4 planes) verified with the exact rounded cosine >= 0.4.
     Plane constants are inlined into the oracle, so the whole approximate
     pipeline — candidate generation AND verification — hash-matches."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     out = similarity.embedding_neardup_pairs(
         emb, threshold=0.4, memo_key=f"neardup:{sf_dir}"
     )
@@ -971,7 +972,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embed_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy keep-smallest-id dedup over the near-dup pairs (id_a < id_b
     always, so dropped = appears-as-id_b): one left-anti join."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     pairs = similarity.embedding_neardup_pairs(
         emb, threshold=0.4, memo_key=f"neardup:{sf_dir}"
     )
@@ -1082,7 +1083,7 @@ def _corpus_stages(spark: SparkSession, sf_dir: str):
     # at most one stage set stays materialized per process
     _STAGE_MEMO.clear()
     release_corpus_cache()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     # persist the scored projection BEFORE filtering: predicate pushdown
     # substitutes computed columns into the filter, duplicating the
     # tokenize/score expressions ~10x per row (measured: 47 copies of the
@@ -1244,7 +1245,7 @@ _POLY = (
 @prepared()
 def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash over the portable polynomial hash — exact oracle."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return dedup.simhash_portable(docs, bits=16).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "simhash16"
     )
@@ -1273,7 +1274,7 @@ def q_unigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering.  Exact oracle."""
     from kats_spark.operators.sampling import unigram_logppl
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = unigram_logppl(docs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1305,7 +1306,7 @@ def q_bigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-replayable arithmetic.  Exact oracle."""
     from kats_spark.operators.sampling import bigram_logppl
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = bigram_logppl(docs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1345,7 +1346,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Broadcast-semi-join plan, exact oracle."""
     from kats_spark.operators.sampling import decontaminate
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     ev = docs.filter(F.col("doc_id") < 20)
     tr = docs.filter(F.col("doc_id") >= 20)
     flagged, _ = decontaminate(tr, ev, shingle_n=8)
@@ -1383,7 +1384,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     top 2-gram share, duplicated-gram occurrence ratio) — exact oracle."""
     from kats_spark.operators.sampling import repetition_stats
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = repetition_stats(docs, shingle_n=2)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1439,7 +1440,7 @@ def q_corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-expressible -> exact oracle."""
     from kats_spark.operators.sampling import token_budget_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = token_budget_sample(docs, budget_tokens=5000, seed=7)
     # Canonical output: deterministic orderBy + explicit casts.  r03's
     # driver hash-mismatch traced to the ORACLE side (DuckDB windowed
@@ -1481,7 +1482,7 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (budget arithmetic + md5 shuffle order + prefix-sum fill)."""
     from kats_spark.operators.sampling import temperature_mixture_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = temperature_mixture_sample(
         docs, total_budget=20000, alpha=0.5, by=["lang"], seed=7
     )
@@ -1525,7 +1526,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Manku/Jain/Sarma WWW'07) over the PORTABLE 16-bit fingerprint —
     exact oracle: fingerprints, chunk join, and bit_count(xor) hamming
     verify all replay in DuckDB."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     # 24-bit fingerprint: 6-bit chunks give 64 buckets per band, keeping
     # band-join fan-out linear at corpus scale (16 bits collided half the
     # corpus into 16 buckets; measured 4.5s -> sub-second at sf0.1)
@@ -1570,7 +1571,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure computes the identical min-reachable-id labels in DuckDB —
     the iterative Spark loop and the recursive SQL agree exactly at the
     fixpoint."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     fp = dedup.simhash_portable(docs, bits=24)
     pairs = dedup.simhash_pairs(
         fp, max_hamming=1, bands=2, bits=24, fp_col="simhash16"
@@ -1620,7 +1621,7 @@ def q_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = n_chars — the RefinedWeb keep-the-longest retention rule).
     Full oracle: the dup_clusters recursive-CTE closure + a window
     argmax replay the identical winners."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     fp = dedup.simhash_portable(docs, bits=24)
     pairs = dedup.simhash_pairs(
         fp, max_hamming=1, bands=2, bits=24, fp_col="simhash16"
@@ -1658,7 +1659,7 @@ def q_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs over the portable hash family (16
     permutations, 4 bands) — exact oracle with the same seeded (a_k, b_k)
     constants inlined into both plans."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return dedup.minhash_portable_pairs(docs, num_hashes=16, bands=4, seed=7).select(
         F.col("id_a").cast("bigint").alias("id_a"),
         F.col("id_b").cast("bigint").alias("id_b"),
@@ -1707,7 +1708,7 @@ def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     must recover exactly those source documents.  Full oracle: the
     portable hash family, truncation, and band join replay in DuckDB
     with identical constants."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     toks = F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ")
     ev = docs.filter(F.col("doc_id") % 97 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
@@ -1805,7 +1806,7 @@ def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-a-glance audit a mixture decision reads.  Spark's exact
     ``percentile`` and DuckDB's ``quantile_cont`` share the interpolated
     definition, so the oracle is exact."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     n_tok = F.size(text.tokens(F.col("text")))
     return (
         docs.withColumn("__nt", n_tok)
@@ -1844,7 +1845,7 @@ def q_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB profile run would use.  Sketch values are engine-internal
     (HLL register layout) -> rows-only; the error bound is asserted in
     tests/test_batch3.py."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return text.sketch_profile(docs, rsd=0.02)
 
 
@@ -1852,7 +1853,7 @@ def q_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf-law audit over corpus token frequencies — full oracle:
     identical normalize/tokenize, rank window, and regr_slope/regr_r2."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return text.zipf_fit(docs, top_n=1000)
 
 
@@ -1885,7 +1886,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy (every 7th doc text-modified, every 13th dropped, 20 synthetic
     ids added) — full oracle: fingerprints and the outer-join
     classification replay exactly in DuckDB."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
     new = (
         docs.filter(F.col("doc_id") % 13 != 0)
         .select(
@@ -1994,7 +1995,7 @@ def q_minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit hash-matches a DuckDB oracle.  This is the don't-guess knob:
     re-run with different (num_hashes, bands) before committing a band
     geometry to a 100TB dedup pass."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     truth = dedup.jaccard_allpairs(docs, shingle_n=3, threshold=0.5).select(
         "id_a", "id_b", F.lit(1).alias("__t")
     )
@@ -2075,7 +2076,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale).  Fully window-expressible -> exact oracle."""
     from kats_spark.operators.sampling import pack_sequences
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return pack_sequences(docs, seq_len=512, seed=7).orderBy("doc_id")
 
 
@@ -2110,7 +2111,7 @@ def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-dense without shipping full chunk strings."""
     from kats_spark.operators.text import chunk_documents
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = chunk_documents(docs, chunk_size=64, overlap=16)
     return out.select(
         "doc_id",
@@ -2152,7 +2153,7 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact hash despite the prune being part of the semantics."""
     from kats_spark.operators.text import tfidf_topk_pairs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return tfidf_topk_pairs(docs, k=3, top_m=10).orderBy("id_a", "rk")
 
 
@@ -2213,7 +2214,7 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit plus each doc's assignment."""
     from kats_spark.operators.sampling import split_assign
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = split_assign(docs, {"train": 0.8, "val": 0.1, "test": 0.1}, seed=7)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "split"
@@ -2241,7 +2242,7 @@ def q_epoch_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per (doc, copy)."""
     from kats_spark.operators.sampling import epoch_upsample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     weighted = docs.withColumn(
         "epochs",
         F.when(F.col("source") == "books", F.lit(2.5))
@@ -2287,7 +2288,7 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB."""
     from kats_spark.operators.dedup import incremental_neardup_pairs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = incremental_neardup_pairs(_incremental_batch(docs), docs)
     return out.select(
         F.col("new_id").cast("bigint").alias("new_id"),
@@ -2327,7 +2328,7 @@ def q_incremental_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
     table = f"band_index_{sf_name}"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     if not spark.catalog.tableExists(table):
         path = os.path.join(
             os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
@@ -2439,7 +2440,7 @@ def q_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints, chunk join, and bit_count(xor) all replay in DuckDB."""
     from kats_spark.operators.dedup import incremental_simhash_pairs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = incremental_simhash_pairs(
         _incremental_batch(docs), docs, max_hamming=1, bands=2, bits=24
     )
@@ -2467,7 +2468,7 @@ def q_incremental_simhash_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
     table = f"simhash_index_{sf_name}"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     if not spark.catalog.tableExists(table):
         path = os.path.join(
             os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
@@ -2551,7 +2552,7 @@ def q_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain cap as one window.  Exact oracle."""
     from kats_spark.operators.sampling import per_source_cap
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = per_source_cap(docs, cap=30, seed=7)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -2581,7 +2582,7 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     polynomial gram hash."""
     from kats_spark.operators.dedup import dup_span_fraction
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = dup_span_fraction(docs, span_n=20, portable=True)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -2623,7 +2624,7 @@ def q_dup_span_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage, ordered string_agg reassembly)."""
     from kats_spark.operators.dedup import excise_dup_spans
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = excise_dup_spans(docs, span_n=5, min_docs=2, portable=True)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -2676,7 +2677,7 @@ def q_incremental_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     (string-keyed grams)."""
     from kats_spark.operators.dedup import excise_vs_corpus
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = excise_vs_corpus(
         _excise_batch(docs), docs, span_n=5, min_docs=1, portable=True
     )
@@ -2730,7 +2731,7 @@ def q_incremental_excise_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
     table = f"gram_index_{sf_name}"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     if not spark.catalog.tableExists(table):
         path = os.path.join(
             os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
@@ -2833,7 +2834,7 @@ def q_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column (it used to be a driver count PLUS a second documents scan
     # inside the plan; the value is identical — the oracle's subquery
     # count — and still computed fresh on every call)
-    n_docs_val = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    n_docs_val = read_parquet(spark, f"{sf_dir}/documents.parquet").count()
     n_docs = spark.range(1).select(
         F.lit(n_docs_val).cast("bigint").alias("n_docs")
     )
@@ -2921,7 +2922,7 @@ def q_embedding_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffle, exact oracle."""
     from kats_spark.operators.similarity import embedding_diag
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     return embedding_diag(emb)
 
 
@@ -2953,7 +2954,7 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     all replayed step-for-step in plans/eig_oracle.py."""
     from kats_spark.operators.similarity import embedding_pca
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     out = embedding_pca(emb, top_k=8)
     return out.select(
         "component",
@@ -2971,7 +2972,7 @@ def q_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     output exploded to (doc, dim, value) scalars for the hash gate."""
     from kats_spark.operators.text import hash_embed
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = hash_embed(docs, dim=64)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -3024,7 +3025,7 @@ def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitwise identical."""
     from kats_spark.operators.text import vocab_drift
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
     out = vocab_drift(
         docs.filter(F.col("doc_id") % 2 == 0),
         docs.filter(F.col("doc_id") % 2 == 1),
@@ -3179,7 +3180,7 @@ def q_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact oracle."""
     from kats_spark.operators.sampling import quality_buckets, unigram_logppl
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     lp = unigram_logppl(docs).join(docs.select("doc_id", "lang"), "doc_id")
     out = quality_buckets(lp, score_col="logppl", by=["lang"], bins=1000)
     return out.select(
@@ -3239,7 +3240,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select("doc_id", "lang", "text")
         .repartition(par)  # one sub-128MB bench split; see q_source_overlap
     )
@@ -3436,7 +3437,7 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select("doc_id", "lang", "text")
         .repartition(par)  # one sub-128MB bench split; see q_source_overlap
     )
@@ -3498,7 +3499,7 @@ def q_dsir_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark-warehouse",
         f"dsir_ratio_{sf_name}",
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     fp = source_fingerprint(f"{sf_dir}/documents.parquet")
     if not stored_is_current(path, fp):
         save_dsir_ratio(
@@ -3558,7 +3559,7 @@ def q_unimax_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative order both engines)."""
     from kats_spark.operators.sampling import unimax_budgets
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = unimax_budgets(docs, budget_tokens=15000.0, epochs_cap=2.0)
     return out.select(
         "lang",
@@ -3621,7 +3622,7 @@ def q_mixture_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select("doc_id", "lang", "source", "text")
         .repartition(par)  # one sub-128MB bench split; see q_source_overlap
     )
@@ -3651,7 +3652,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precedent); a real corpus has plenty of input splits already
     par = spark.sparkContext.defaultParallelism
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select("doc_id", "source", "text")
         .repartition(par)
     )

@@ -25,6 +25,7 @@ from kats_spark.functions import calendar, metrics as M, rolling, stats, ta
 from kats_spark.plans.prepared import prepared
 from kats_spark.operators import decomposition, dedup, mk, resample, robust_stat
 from kats_spark.operators import similarity, statsig, text, trend
+from kats_spark.sources.load import read_parquet
 from kats_spark.tsframe import DEFAULT as S
 
 
@@ -56,7 +57,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     to DuckDB's reading)."""
     _utc(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_type = dict(ev.dtypes)["ts"]
     if ts_type == "bigint":  # nanos read as long
         ev = ev.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("bigint")))
@@ -147,10 +148,10 @@ def q_daily_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     region -> 7-day trailing MA.  The canonical 'build a series from a fact
     table, then window it' pipeline."""
     _utc(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
+    customer = read_parquet(spark, f"{sf_dir}/customer.parquet")
+    nation = read_parquet(spark, f"{sf_dir}/nation.parquet")
+    region = read_parquet(spark, f"{sf_dir}/region.parquet")
     daily = (
         orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
@@ -192,7 +193,7 @@ FROM daily
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary — the aggregate-pushdown anchor."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    l = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     out = (
         l.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
@@ -942,7 +943,7 @@ SELECT a.*, e.crps, e.leps FROM aggs a JOIN ecdf e USING (series_id)
 
 def q_date_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     days = orders.select(F.date_trunc("day", "o_orderdate").alias("time")).distinct()
     feats = calendar.date_features("time")
     out = days.withColumns({k: v.cast("int") for k, v in feats.items()})
@@ -972,7 +973,7 @@ FROM days
 
 def q_fourier_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     days = orders.select(F.date_trunc("day", "o_orderdate").alias("time")).distinct()
     feats = calendar.fourier_features("time", period_seconds=7 * 86400.0, order=2)
     out = days.withColumns({k: _rnd(v, 6) for k, v in feats.items()})

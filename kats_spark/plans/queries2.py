@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from kats_spark.models import fcst as fcst_mod
 from kats_spark.plans.prepared import prepared
+from kats_spark.sources.load import read_parquet
 from kats_spark.operators import (
     backtest as bt_mod,
     bocpd as bocpd_mod,
@@ -1197,7 +1198,7 @@ FROM g
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = text.lang_id(docs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1247,7 +1248,7 @@ def q_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile VALUES table joins the identical trigram explode in DuckDB.
     Scores round to 9 decimals BEFORE the argmax on both sides so
     summation-order noise cannot flip ties."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = text.lang_id_ngram(docs)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1291,7 +1292,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doc_id), the sequential scrub runs, and DuckDB replays the
     identical pattern chain — counts and an md5 of the scrubbed text
     hash-match."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     enriched = docs.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.concat(
@@ -1346,7 +1347,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval for a literal query — full oracle: the
     Okapi formula replays term-for-term in DuckDB (rounded scores ORDER
     the top-k on both sides, so ties cannot diverge)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = text.bm25_topk(docs, _BM25_TERMS, k=10)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "score"
@@ -1386,7 +1387,7 @@ LIMIT {k}
 
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = text.fingerprint(docs, method="md5")
     return out.select(F.col("doc_id").cast("bigint").alias("doc_id"), "fingerprint")
 
@@ -1793,7 +1794,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cluster assignment is MLlib-internal)."""
     from kats_spark.operators import ivf
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     indexed, model = ivf.build_index(emb, n_cells=8, seed=7)
@@ -1819,7 +1820,7 @@ def q_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell ranking — replays exactly in the DuckDB oracle."""
     from kats_spark.operators import ivf
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     out = ivf.diversity_sample(emb, budget=200, n_cells=8)
@@ -1839,7 +1840,7 @@ def q_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivf_topk`` (inverted lists + n_probe), but value-hash checkable."""
     from kats_spark.operators import ivf
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     indexed, centers = ivf.build_index_portable(emb, n_cells=8)
@@ -1875,7 +1876,7 @@ def q_ivf_stored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark-warehouse",
         f"ivf_store_{sf_name}",
     )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     if not os.path.exists(os.path.join(path, "lists", "_SUCCESS")):
@@ -1904,7 +1905,7 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC.  One row per query: (query_id, recall_adc, recall_reranked)."""
     from kats_spark.operators import pq
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     cb = pq.train_codebooks(emb, m=16, ks=32, sample_rows=2048, seed=7)
@@ -1970,7 +1971,7 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kats_spark.operators.ivf import _rnd6
     from kats_spark.operators.similarity import cosine as _cos
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     indexed, centers = ivf.build_index_portable(emb, n_cells=8)
@@ -2040,7 +2041,7 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         indexed.persist()
         centers_df.persist()
     else:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         )
         indexed, centers_df = ivf.build_index_portable(emb, id_col="vec_id", n_cells=8)
@@ -2276,7 +2277,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid_dist, kept)."""
     from kats_spark.operators.similarity import semantic_dedup
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     out = semantic_dedup(emb, n_cells=8, threshold=0.35)
@@ -2326,7 +2327,7 @@ def q_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-measured): same algorithm family, hash-checkable arithmetic."""
     from kats_spark.operators import pq
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     codes, centers = pq.build_portable(emb, m=8, ks=8, dim=64)
@@ -3930,7 +3931,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kats_spark.sources.ann_store import source_fingerprint
 
     src = f"{sf_dir}/documents.parquet"
-    docs = spark.read.parquet(src).select("doc_id", "text")
+    docs = read_parquet(spark, src).select("doc_id", "text")
     # memo_key: first call trains, later calls measure the standing
     # classifier's scoring plan (the r08/r14 amortization contract;
     # memo-hit == fresh bit-identity pinned in tests/test_ml.py).  Keyed
@@ -3951,7 +3952,7 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     are engine-portable and fully oracled."""
     from kats_spark.operators import multimodal
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").alias("media_id"),
         F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
@@ -3980,7 +3981,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     + hex-pair arithmetic."""
     from kats_spark.operators import multimodal
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").alias("media_id"),
         F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
@@ -4055,7 +4056,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     par = spark.sparkContext.defaultParallelism
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select(
             F.col("doc_id").cast("bigint").alias("doc_id"),
             _clean(192).alias("s192"),
@@ -4185,7 +4186,7 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select(
             F.col("doc_id").cast("bigint").alias("doc_id"),
             F.rpad(
@@ -4285,7 +4286,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     par = spark.sparkContext.defaultParallelism
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select(F.col("doc_id").cast("bigint").alias("doc_id"), _clean(n).alias("s64"))
         .repartition(par)
     )
@@ -4483,7 +4484,7 @@ def q_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
     )
     par = spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("bigint").alias("doc_id"), _clean(192).alias("s192")
     )
     # r14: size the python-stage fan-out by bytes instead of pinning it
@@ -4568,7 +4569,7 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     par = spark.sparkContext.defaultParallelism
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .select(F.col("doc_id").cast("bigint").alias("doc_id"),
                 _clean.alias("s256"))
         .repartition(par)

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from kats_spark.sources.load import read_parquet
+
 
 def get_spark(app_name: str = "kats_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -47,5 +49,5 @@ def tables(spark: SparkSession, sf_dir: str) -> dict:
     for n in names:
         path = os.path.join(sf_dir, f"{n}.parquet")
         if os.path.exists(path):
-            out[n] = spark.read.parquet(path)
+            out[n] = read_parquet(spark, path)
     return out

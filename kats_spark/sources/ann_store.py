@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kats_spark.operators.similarity import cosine
+from kats_spark.sources.load import footer_schema, footers, read_parquet
 
 
 def save_ivf(
@@ -68,7 +69,7 @@ def search_stored(
     The probe set is collected driver-side (bounded: <= n_queries x
     n_probe ints, and query batches are interactive-sized by nature);
     a fully-lazy variant would join instead and give up pruning."""
-    centers_df = spark.read.parquet(f"{path}/centroids")
+    centers_df = read_parquet(spark, f"{path}/centroids")
     qc = queries.crossJoin(F.broadcast(centers_df))
     dist = F.sqrt(
         F.aggregate(
@@ -89,7 +90,7 @@ def search_stored(
     probe_cells = sorted(
         r.cell_id for r in probes.select("cell_id").distinct().collect()
     )
-    lists = spark.read.parquet(f"{path}/lists").filter(
+    lists = read_parquet(spark, f"{path}/lists").filter(
         F.col("cell_id").isin(probe_cells)
     )
     cand = probes.join(lists, "cell_id")
@@ -141,7 +142,7 @@ def search_stored_portable(
     file-open."""
     from kats_spark.operators.ivf import _rnd6, _sq_dist
 
-    centers = spark.read.parquet(f"{path}/centroids")
+    centers = read_parquet(spark, f"{path}/centroids")
     qc = queries.crossJoin(F.broadcast(centers))
     ranked = qc.withColumn(
         "__d", _rnd6(_sq_dist(F.col(vec_col), F.col("center")))
@@ -157,7 +158,7 @@ def search_stored_portable(
     probe_cells = sorted(
         r.cell_id for r in probes.select("cell_id").distinct().collect()
     )
-    lists = spark.read.parquet(f"{path}/lists").filter(
+    lists = read_parquet(spark, f"{path}/lists").filter(
         F.col("cell_id").isin(probe_cells)
     )
     cand = F.broadcast(probes).join(lists, "cell_id")
@@ -429,7 +430,7 @@ def register_bucketed_table(
     ``spark.table(...)`` plans the same bucketed scan a fresh
     ``saveAsTable`` registration would.  Callers gate on
     ``stored_is_current`` so stale data is rebuilt, never reused."""
-    schema = spark.read.parquet(path).schema
+    schema = footer_schema(spark, path)
     cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
     bc = ", ".join(f"`{c}`" for c in bucket_cols)
     spark.sql(
@@ -454,20 +455,9 @@ def source_fingerprint(src_path: str) -> str:
     import hashlib
     import os
 
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(src_path):
-        parts = sorted(
-            os.path.join(src_path, f)
-            for f in os.listdir(src_path)
-            if f.endswith(".parquet")
-        )
-    else:
-        parts = [src_path]
     rows, size = 0, 0
     digest = hashlib.md5()
-    for p in parts:
-        meta = pq.ParquetFile(p).metadata
+    for p, meta in footers(src_path):
         rows += meta.num_rows
         size += os.path.getsize(p)
         for rg in range(meta.num_row_groups):
@@ -547,8 +537,9 @@ def dsir_weights_stored(
     ``dsir_weights`` on the fitting corpus (asserted in tests)."""
     from kats_spark.operators.dsir import ngram_bucket_rows
 
-    lr = spark.read.parquet(path)
-    n_stored = lr.count()  # dense table: exactly num_buckets rows, tiny
+    lr = read_parquet(spark, path)
+    # dense table: exactly num_buckets rows, counted from the footers
+    n_stored = sum(meta.num_rows for _, meta in footers(path))
     if n_stored != num_buckets:
         raise ValueError(
             f"stored ratio table at {path} has {n_stored} buckets but "
@@ -615,7 +606,7 @@ def bitext_mine_stored(
     from kats_spark.operators.ivf import _rnd6, _sq_dist
     from kats_spark.operators.similarity import _margin_tail, dot, l2_norm
 
-    centers = spark.read.parquet(f"{path}/centroids")
+    centers = read_parquet(spark, f"{path}/centroids")
     x = x_df.select(
         F.col(id_col).alias("x_id"), F.col(vec_col).alias("__xv")
     ).withColumn("__nx", l2_norm(F.col("__xv")))
@@ -635,7 +626,7 @@ def bitext_mine_stored(
     probe_cells = sorted(
         r.cell_id for r in probes.select("cell_id").distinct().collect()
     )
-    lists = spark.read.parquet(f"{path}/lists").filter(
+    lists = read_parquet(spark, f"{path}/lists").filter(
         F.col("cell_id").isin(probe_cells)
     )
     scored = (

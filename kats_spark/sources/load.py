@@ -15,12 +15,94 @@ other columns.
 
 from __future__ import annotations
 
+import os
+from typing import Iterator
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kats_spark.tsframe import TSSchema, DEFAULT
 
 _UNIT_TO_SECONDS = {"s": 1.0, "ms": 1e-3, "us": 1e-6, "ns": 1e-9}
+
+
+def _data_files(path: str) -> Iterator[str]:
+    """Data files of a parquet path in sorted order, listed the way Spark
+    lists them: the path itself when it is a file; under a directory,
+    every file whose name does not start with ``_`` or ``.`` (so
+    ``_SUCCESS``, ``_SOURCE_FINGERPRINT`` and ``.crc`` sidecars drop
+    out), descending into ``k=v`` partition directories."""
+    if not os.path.isdir(path):
+        yield path
+        return
+    for name in sorted(os.listdir(path)):
+        full = os.path.join(path, name)
+        if os.path.isdir(full):
+            if "=" in name and not name.startswith("."):
+                yield from _data_files(full)
+        elif not name.startswith(("_", ".")):
+            yield full
+
+
+def footers(path: str) -> Iterator[tuple[str, "pyarrow.parquet.FileMetaData"]]:
+    """(file, footer metadata) for every data file of a parquet path —
+    read with pyarrow, so no Spark job runs."""
+    import pyarrow.parquet as pq
+
+    for f in _data_files(path):
+        yield f, pq.read_metadata(f)
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for a parquet path, from one footer.
+
+    Spark infers from the first data file's footer (``mergeSchema`` off)
+    and appends partition columns from the directory names itself, so one
+    footer is enough.  The footer's arrow schema goes through
+    ``from_arrow_schema(prefer_timestamp_ntz=True)``, as Spark 4 infers
+    naive timestamps as ``timestamp_ntz``.  First the top-level types that
+    Spark's parquet reader sees differently from arrow are mapped its way
+    (ParquetToSparkSchemaConverter): INT96 is an instant,
+    ``timestamp[ns]`` is ``bigint`` under
+    ``spark.sql.legacy.parquet.nanosAsLong``, an arrow duration is its
+    int64 storage, and unsigned ints widen."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    first = next(footers(path), None)
+    if first is None:
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    _, meta = first
+    nanos_as_long = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
+    int96 = {
+        meta.schema.column(i).path
+        for i in range(meta.num_columns)
+        if meta.schema.column(i).physical_type == "INT96"
+    }
+    fields = []
+    for f in meta.schema.to_arrow_schema():
+        t = f.type
+        if f.name in int96:
+            t = pa.timestamp("us", tz="UTC")
+        elif pa.types.is_timestamp(t) and t.unit == "ns" and nanos_as_long:
+            t = pa.int64()
+        elif pa.types.is_duration(t):
+            t = pa.int64()
+        elif pa.types.is_unsigned_integer(t):
+            t = {8: pa.int16(), 16: pa.int32(), 32: pa.int64()}.get(
+                t.bit_width, pa.decimal128(20, 0)
+            )
+        fields.append(f.with_type(t))
+    return from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=True)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema pinned from the
+    footer, so the read starts no schema-inference job.  Nothing is
+    memoized: a file rewritten under the same path is re-read on the next
+    call."""
+    return spark.read.schema(footer_schema(spark, path)).parquet(path)
 
 
 def _dst_flags(local: Column, tz: str) -> tuple[Column, Column, Column]:

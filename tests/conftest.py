@@ -1,3 +1,5 @@
+import contextlib
+import itertools
 import os
 import sys
 
@@ -19,3 +21,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``with count_jobs() as jobs:`` fills ``jobs`` with the ids of the
+    Spark jobs the block started, read from the block's own job group."""
+
+    @contextlib.contextmanager
+    def jobs():
+        sc = spark.sparkContext
+        group = f"count-jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        ids: list[int] = []
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            # the status tracker is fed by the listener bus, asynchronously
+            sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs

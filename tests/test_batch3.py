@@ -1,6 +1,8 @@
 """Tests: streaming CUSUM model, DTW CPD, KDE translator, ARIMA HR,
 metalearners."""
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -19,20 +21,51 @@ def test_cusum_stream_state_roundtrip():
     assert legacy["s_pos"] == 0.0 and legacy["n"] == 3
 
 
+def _binom_ppf(q: float, n: int, p: float) -> int:
+    """Smallest k with P(Binomial(n, p) <= k) >= q."""
+    cdf = 0.0
+    for k in range(n + 1):
+        cdf += math.comb(n, k) * p**k * (1 - p) ** (n - k)
+        if cdf >= q:
+            return k
+    return n
+
+
 def test_cusum_batch_detects_shift_and_retention(spark):
+    """Many-draw form: 40 quiet and 40 shifted series (8 sigma at index
+    120), the bands derived in TESTDATA.md before the first run.
+
+    Quiet: 190 monitored points against the k = 0.5, h = 5 in-control ARL
+    of 465 (Montgomery Table 9.3) give an alarm in a series with
+    p0 = 1 - exp(-190/465); the alarm count stays <= the 0.999 quantile of
+    Binomial(40, p0).  Shift: the 4-sigma out-of-control ARL of 2.01 bounds
+    an 8-sigma run length by Markov, P(RL >= 11) <= 2.01/11, and a false
+    alarm in the 10 points before the shift (<= 10/465) may restart the
+    burn-in; so a series flags within 10 points of the shift with
+    p1 >= 1 - 2.01/11 - 10/465, and the detected count stays >= the 0.001
+    quantile of Binomial(40, p1).  The seed was fixed before the first
+    run."""
+    seed, n_series, shift_at = 2024, 40, 120
     df = simulator.simulate(
-        spark, n_series=2, n_points=200, noise_std=1.0,
-        level_shift_at=120, level_shift_size=8.0, seed=101,
+        spark, n_series=n_series, n_points=200, noise_std=1.0,
+        level_shift_at=shift_at, level_shift_size=8.0, seed=seed,
     )
     out = cm.cusum_batch(df, k=0.5, h=5.0).toPandas()
-    for sid, g in out.groupby("series_id"):
+    detected = 0
+    for _, g in out.groupby("series_id"):
         g = g.sort_values("time").reset_index(drop=True)
-        flagged = g[g.cp_flag == 1]
-        assert len(flagged) >= 1
-        assert abs(flagged.index[0] - 120) <= 10
-    quiet = simulator.simulate(spark, n_series=1, n_points=200, noise_std=1.0, seed=102)
+        after = g.index[(g.cp_flag == 1) & (g.index >= shift_at)]
+        detected += int(len(after) > 0 and after[0] - shift_at <= 10)
+    p1 = 1 - 2.01 / 11 - 10 / 465
+    assert detected >= _binom_ppf(0.001, n_series, p1), detected
+
+    quiet = simulator.simulate(
+        spark, n_series=n_series, n_points=200, noise_std=1.0, seed=seed + 1
+    )
     qo = cm.cusum_batch(quiet, k=0.5, h=5.0).toPandas()
-    assert qo.cp_flag.sum() == 0
+    alarmed = int((qo.groupby("series_id").cp_flag.sum() > 0).sum())
+    p0 = 1 - math.exp(-190 / 465)
+    assert alarmed <= _binom_ppf(0.999, n_series, p0), alarmed
 
 
 def test_cusum_changepoint_cap():

@@ -182,6 +182,19 @@ def test_dsir_stored_rejects_bucket_mismatch(corpus, spark, tmp_path):
         dsir_weights_stored(spark, path, corpus, num_buckets=128)
 
 
+def test_q_dsir_stored_call_starts_no_job_on_current_table(spark, sf_dir, count_jobs):
+    """On a current stored ratio table the call only plans: the table's
+    schema and its bucket count come from the parquet footers, so no
+    schema-inference job and no ``count()`` run before the action."""
+    import __spark_entry__ as entry
+
+    q = entry.queries()["dsir_stored"]
+    q(spark, sf_dir)  # builds the stored table if it is stale
+    with count_jobs() as jobs:
+        q(spark, sf_dir)
+    assert jobs == []
+
+
 def test_dsir_weights_partition_invariant(corpus):
     """Weights are a pure function of the data: repartitioning the
     corpus changes nothing (summation-order differences stay inside

@@ -9,6 +9,8 @@ grids).  A regression that sneaks either in changes the 100 TB story,
 not just a benchmark number — so it fails the suite, not a code review.
 """
 
+import pathlib
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -111,16 +113,58 @@ LAZY_QUERIES = [
 ]
 
 
+# rows that still start Spark jobs while their frame is built, and why
+EAGER_BUILDS = {
+    "hpt_sobol": "scores its 12 Sobol candidates with one aggregate "
+    ".first() and returns the ranked trial log as literals",
+    "global_rnn": "fits its GRU on the driver from a bounded collect of "
+    "the hash-ranked window sample",
+    "bitext_mine_stored": "collects the probed cell ids to prune the stored "
+    "lists by partition, and builds the store on its first call",
+}
+
+
 @pytest.fixture(scope="module")
-def plans(spark):
+def built(spark, count_jobs):
+    """name -> (executed plan text, Spark jobs the query call started)."""
     import __spark_entry__ as entry
 
     qs = entry.queries()
     out = {}
     for name in LAZY_QUERIES:
-        df = qs[name](spark, SF)
-        out[name] = df._jdf.queryExecution().executedPlan().toString()
+        with count_jobs() as jobs:
+            df = qs[name](spark, SF)
+        out[name] = (df._jdf.queryExecution().executedPlan().toString(), len(jobs))
     return out
+
+
+@pytest.fixture(scope="module")
+def plans(built):
+    return {n: plan for n, (plan, _) in built.items()}
+
+
+def test_lazy_queries_start_no_job_while_built(built):
+    """Building a lazy row's frame starts no Spark job: no schema
+    inference, no gate count, no eager action.  EAGER_BUILDS names the
+    rows that still do, with the reason."""
+    offenders = {n: j for n, (_, j) in built.items() if j and n not in EAGER_BUILDS}
+    assert not offenders, offenders
+
+
+def test_parquet_reads_go_through_the_loader():
+    """``spark.read.parquet(path)`` without a schema starts a
+    schema-inference job on every call; the package reads parquet only
+    through ``sources.load.read_parquet``, which pins the footer schema."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "kats_spark"
+    loader = pkg / "sources" / "load.py"
+    offenders = [
+        f"{p.relative_to(pkg)}:{i}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != loader
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if ".read.parquet(" in line
+    ]
+    assert not offenders, offenders
 
 
 def test_no_row_at_a_time_python_udfs(plans):

@@ -582,3 +582,113 @@ def test_register_bucketed_table_matches_rebuild_and_one_file_per_bucket(spark, 
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(f"DROP TABLE IF EXISTS {table2}")
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _inferred_equals_loaded(spark, path):
+    return load_mod.read_parquet(spark, path).schema == spark.read.parquet(path).schema
+
+
+def test_read_parquet_schema_matches_inference_on_testdata(spark, sf_dir):
+    import glob
+
+    paths = sorted(glob.glob(f"{sf_dir}/*.parquet"))
+    assert paths
+    assert [p for p in paths if not _inferred_equals_loaded(spark, p)] == []
+
+
+def test_read_parquet_nanos_as_long(spark, tmp_path):
+    """A pyarrow ``timestamp[ns]`` column is ``bigint`` under nanosAsLong,
+    as Spark infers it (the events.parquet layout ``load_events`` reads)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "ns.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1_500, 2_500], pa.timestamp("ns")), "v": [1.0, 2.0]}), p
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, "false")
+    spark.conf.set(key, "true")
+    try:
+        assert _inferred_equals_loaded(spark, p)
+        assert [r.ts for r in load_mod.read_parquet(spark, p).collect()] == [1_500, 2_500]
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_read_parquet_pyarrow_types_match_inference(spark, tmp_path):
+    """Columns whose arrow type Spark's parquet reader sees differently:
+    unsigned ints widen, a duration is its int64 storage, INT96 is an
+    instant; dictionary, zoned and naive timestamps, lists, structs and
+    decimals map as arrow does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pa.table({
+        "u8": pa.array([1, 2], pa.uint8()),
+        "u16": pa.array([1, 2], pa.uint16()),
+        "u32": pa.array([1, 2], pa.uint32()),
+        "u64": pa.array([1, 2], pa.uint64()),
+        "d": pa.array([1, 2], pa.duration("s")),
+        "c": pa.array(["a", "b"]).dictionary_encode(),
+        "tz": pa.array([1, 2], pa.timestamp("ms", tz="America/New_York")),
+        "ntz": pa.array([1, 2], pa.timestamp("us")),
+        "l": pa.array([[1.0], [2.0]]),
+        "s": pa.array([{"a": 1}, {"a": 2}]),
+        "dec": pa.array([1, 2], pa.decimal128(10, 2)),
+    })
+    p = str(tmp_path / "types.parquet")
+    pq.write_table(t, p)
+    assert _inferred_equals_loaded(spark, p)
+    p96 = str(tmp_path / "int96.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1_000, 2_000], pa.timestamp("ns"))}),
+        p96,
+        use_deprecated_int96_timestamps=True,
+    )
+    assert _inferred_equals_loaded(spark, p96)
+
+
+def test_read_parquet_spark_dir_with_sidecars(spark, tmp_path):
+    """``_SUCCESS`` / ``_SOURCE_FINGERPRINT`` / ``.crc`` files are skipped,
+    as Spark skips them."""
+    p = str(tmp_path / "flat")
+    spark.range(20).selectExpr("id", "cast(id as double) v").write.parquet(p)
+    (tmp_path / "flat" / "_SOURCE_FINGERPRINT").write_text("0:0:x")
+    assert (tmp_path / "flat" / "_SUCCESS").exists()
+    assert _inferred_equals_loaded(spark, p)
+    assert load_mod.read_parquet(spark, p).count() == 20
+
+
+def test_read_parquet_partitioned_dir(spark, tmp_path):
+    """One data-file footer is enough: Spark appends the ``cell_id``
+    partition column from the directory names itself."""
+    p = str(tmp_path / "lists")
+    spark.range(30).selectExpr("id", "id % 3 as cell_id", "id * 0.5 as v").write.partitionBy(
+        "cell_id"
+    ).parquet(p)
+    assert _inferred_equals_loaded(spark, p)
+    got = sorted(load_mod.read_parquet(spark, p).collect())
+    assert got == sorted(spark.read.parquet(p).collect())
+
+
+def test_read_parquet_starts_no_job(spark, sf_dir, count_jobs):
+    with count_jobs() as jobs:
+        df = load_mod.read_parquet(spark, f"{sf_dir}/documents.parquet")
+    assert jobs == []
+    assert "doc_id" in df.columns
+
+
+def test_read_parquet_rereads_a_rewritten_path(spark, tmp_path):
+    """No memo: a file rewritten under the same path with other columns
+    is read with its new columns on the next call."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), p)
+    assert load_mod.read_parquet(spark, p).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [0.5]}), p)
+    df = load_mod.read_parquet(spark, p)
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 0.5)]

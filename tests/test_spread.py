@@ -24,6 +24,14 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
+def _require_fan_out(spark):
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip(
+            "needs defaultParallelism >= 2: skew.spread is a 'No-op when the "
+            "input already has enough splits', and one split is enough at 1"
+        )
+
+
 def test_spread_noop_when_enough_splits(spark, docs):
     n = spark.sparkContext.defaultParallelism
     wide = docs.repartition(n + 2)
@@ -71,6 +79,7 @@ def test_shingle_rows_spread_adds_no_exchange(spark, docs):
     """The id-hash spread satisfies the (id, pos) window's required
     distribution, so the single-split plan still has exactly ONE
     shuffle exchange — it moved BEFORE the explode, it did not stack."""
+    _require_fan_out(spark)
     one = docs.coalesce(1)
     plan = dedup.shingle_rows(one)._jdf.queryExecution().executedPlan().toString()
     import re
@@ -98,6 +107,7 @@ def test_fan_out_false_invariant_and_no_repartition(spark, docs):
 def test_incremental_pairs_batch_side_not_spread(spark, docs):
     """The incremental operators pass fan_out=False for the arriving
     batch only: exactly the corpus side's spread repartition remains."""
+    _require_fan_out(spark)
     batch = docs.filter(F.col("doc_id") % 7 == 0).coalesce(1)
     out = dedup.incremental_neardup_pairs(batch, docs.coalesce(1))
     plan = out._jdf.queryExecution().executedPlan().toString()
