@@ -1,9 +1,9 @@
 """Registry hook for persist() boundaries inside reusable plans.
 
 Several operators persist a slim frame that feeds both sides of a
-self-join (simhash chunk rows, LSH band buckets, winnow fingerprints,
-IVF scored rows): without the boundary the expensive upstream pipeline
-executes once per consumer.  When such an operator runs inside a
+self-join (LSH band buckets, winnow fingerprints, IVF scored rows):
+without the boundary the expensive upstream pipeline executes once per
+consumer.  When such an operator runs inside a
 plan-memoized query (plans/prepared.py), an external
 ``spark.catalog.clearCache()`` silently drops the persist REGISTRATION,
 and the memoized plan would quietly lose its boundary on reuse — the

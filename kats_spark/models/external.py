@@ -10,7 +10,6 @@ kernel runs unchanged — this is the canonical Spark-Prophet pattern.
 
 Reference parity targets:
 - ProphetModel       kats/models/prophet.py:34-1041 (fit :370, predict :450)
-- NeuralProphet      kats/models/neuralprophet.py:46-528
 - LSTMModel          kats/models/lstm.py:34-331
 - GlobalModel (RNN)  kats/models/globalmodel/model.py:35 (train :377)
 """
@@ -109,15 +108,6 @@ def lstm_forecast(df: DataFrame, steps: int, freq_seconds: int, s: TSSchema = DE
         raise BackendMissing("torch LSTM kernel requires torch")
 
     return _gated_forecast(df, steps, freq_seconds, "torch", kernel, s)
-
-
-def neuralprophet_forecast(df: DataFrame, steps: int, freq_seconds: int, s: TSSchema = DEFAULT) -> DataFrame:
-    """Per-series NeuralProphet fan-out (kats/models/neuralprophet.py:46)."""
-
-    def kernel(pdf, steps, freq_seconds, s):  # pragma: no cover - needs backend
-        raise BackendMissing("neuralprophet kernel requires neuralprophet")
-
-    return _gated_forecast(df, steps, freq_seconds, "neuralprophet", kernel, s)
 
 
 def prophet_detector_scores(

@@ -115,9 +115,12 @@ def bpe_train(
     correctness in tests."""
     spark = df.sparkSession
     wf = word_frequencies(df, text_col, id_col)
-    n_words = wf.count()
-    if n_words <= driver_gate_words:
-        rows = [(r["word"], r["freq"]) for r in wf.collect()]
+    # limit-probe, not count() then collect(): wf is not persisted, so
+    # each action runs the corpus-sized tokenize + groupBy.  One action
+    # decides the path and, when the vocabulary fits, is the table
+    probe = wf.limit(driver_gate_words + 1).collect()
+    if len(probe) <= driver_gate_words:
+        rows = [(r["word"], r["freq"]) for r in probe]
         merges = _train_driver(rows, num_merges)
         schema = "rank int, left string, right string, pair_count bigint"
         if not merges:

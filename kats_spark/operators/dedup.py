@@ -12,8 +12,8 @@ standard corpus-dedup stack, built Spark-first:
   post-signature shuffle and is key-spread by construction (bucket ids).
 - simhash: 64-bit sign-sum hash over token hashes; near-dups = hamming
   distance ≤ k on bucketed prefixes.
-- ngram_jaccard: exact Jaccard on shingle sets for candidate pairs
-  (verification stage after LSH).
+- jaccard_allpairs: exact all-pairs shingle-set Jaccard with prefix
+  filtering (no LSH approximation).
 """
 
 from __future__ import annotations
@@ -248,31 +248,6 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
     )
     return in_row.unionByName(joined).distinct()
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    candidate_pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Verify candidate pairs with exact shingle-set Jaccard (the LSH
-    verification stage).  Joins shingle arrays onto both sides — two
-    broadcast-or-shuffle hash joins on ids."""
-    sh = df.select(F.col(id_col), shingles(F.col(text_col), shingle_n).alias("__sh"))
-    j = (
-        candidate_pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sh", "__sa"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sh", "__sb"), "id_b")
-    )
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
-    union = F.size(F.array_union("__sa", "__sb")).cast("double")
-    return (
-        j.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def jaccard_allpairs(
@@ -727,17 +702,15 @@ def simhash_pairs(
     bounded-fan-out pattern as the MinHash band join; chunk values are
     hash-distributed so no hot key."""
     nb = _check_simhash_bands(bands, max_hamming, bits)
-    # persist the chunk rows: BOTH sides of the band self-join derive
-    # from them, and Spark does not recognize the aliased subtrees as
-    # reusable — without the boundary the whole upstream fingerprint
-    # pipeline (tokenize + per-char polynomial hash + `bits` sign-sum
-    # aggregates for the portable family) executes TWICE per action
-    # (plan audit: two full Scan→HashAggregate subtrees, zero
-    # ReusedExchange).  The chunk rows are |docs|×bands slim longs — the
-    # cheap thing to materialize vs the expensive thing to recompute.
-    keyed = boundary.register(
-        simhash_chunk_rows(fp_df, nb, bits, id_col, fp_col).persist()
-    )
+    # no persist on the chunk rows, although BOTH sides of the band
+    # self-join derive from them: the two sides' shuffles are the same
+    # exchange of the same subtree, and AQE reuses it — the executed
+    # simhash_neardup plan holds one documents FileScan, one
+    # ReusedExchange and no InMemoryTableScan (asserted in tests), so
+    # the scan, tokenize and per-token hashing run once per action
+    # (only the post-shuffle sign-sum merge repeats per side).  A
+    # persist here only added two cache-fill jobs per call.
+    keyed = simhash_chunk_rows(fp_df, nb, bits, id_col, fp_col)
     l = keyed.select(
         "__band", "__chunk", F.col(id_col).alias("id_a"), F.col(fp_col).alias("__fa")
     )
@@ -786,9 +759,17 @@ def dup_components(
     ``driver_gate_edges`` distinct edges (~16 MB of longs at the 1M
     default) a driver-side union-find answers in one collect instead of
     O(log n) join rounds — each round costs 2 joins + an action of
-    FIXED overhead that dwarfs the data at this size.  Above the gate
-    the distributed loop runs unchanged (the 100 TB path; equivalence
-    of the two paths is asserted in tests)."""
+    FIXED overhead that dwarfs the data at this size.  The gate is ONE
+    action that both decides and collects: a limit-probe of
+    ``driver_gate_edges // 2 + 1`` deduped directed pairs (the driver
+    path runs iff ``2 * distinct_pairs <= driver_gate_edges``).  If the
+    probe comes back short, it IS the pair list.  Otherwise the
+    distributed loop runs unchanged (the 100 TB path; equivalence of
+    the two paths is asserted in tests) over the same persisted pair
+    frame: the probe's job caches every partition it computes whole,
+    and any block it did not fill is computed from that cached plan on
+    the loop's first action, so the pair pipeline runs once on either
+    path."""
     e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     # Every iteration MATERIALIZES via eager localCheckpoint: the
     # min-label + pointer-jump step references the previous labels frame
@@ -803,25 +784,28 @@ def dup_components(
     # serializes through 8 partitions (VERDICT r03 item #5).
     sc = pairs.sparkSession.sparkContext
     loop_parts = max(8, sc.defaultParallelism)
-    # persist(), not an eager localCheckpoint, for the edge frame: the
-    # gate count below materializes it either way, but a localCheckpoint
-    # additionally converts the whole upstream pair pipeline to an RDD at
-    # call time (~1 s of physical planning, the r13 measurement) — the
-    # persist registers the same boundary for free and the count's job
-    # does the materialization.  The per-ROUND label checkpoints in the
-    # distributed loop stay localCheckpoints: there the point is lineage
-    # TRUNCATION (persist leaves the logical plan growing exponentially).
+    # persist(), not an eager localCheckpoint, for the edge frame: a
+    # localCheckpoint converts the whole upstream pair pipeline to an
+    # RDD at call time (~1 s of physical planning, the r13 measurement)
+    # — the persist registers the same boundary for free.  It is what
+    # lets an oversize probe hand the distributed loop the pairs without
+    # recomputing the fingerprint + band-join pipeline.  The per-ROUND
+    # label checkpoints in the distributed loop stay localCheckpoints:
+    # there the point is lineage TRUNCATION (persist leaves the logical
+    # plan growing exponentially).
     # deduped DIRECTED pairs only: the driver path never needs the
     # symmetrized frame (components of the pair list == components of
     # its symmetric closure), so it collects and processes HALF the
     # rows; the distributed path symmetrizes below from this cache.
     dpairs = e.distinct().coalesce(loop_parts).persist()
-    n_pairs = dpairs.count()  # materializes the persisted blocks
-    if 2 * n_pairs <= driver_gate_edges:
+    # limit-probe instead of a count() gate followed by a collect: one
+    # action decides the path and, when the pairs fit, carries them
+    cap = driver_gate_edges // 2
+    epd = dpairs.limit(cap + 1).toPandas()  # Arrow batch transfer
+    if len(epd) <= cap:
         import numpy as np
         import pandas as pd
 
-        epd = dpairs.toPandas()  # Arrow batch transfer (reads the cache)
         dpairs.unpersist()
         spark = pairs.sparkSession
         id_type = dict(e.dtypes)["u"]

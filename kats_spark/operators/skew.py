@@ -57,12 +57,6 @@ def input_is_big(df: DataFrame, threshold: int = BIG_INPUT_BYTES) -> bool:
     return est >= threshold
 
 
-def with_salt(df: DataFrame, cols: list[str], buckets: int, out: str = "__salt") -> DataFrame:
-    """Deterministic salt in [0, buckets): xxhash64 of the given columns
-    (use high-cardinality payload columns, NOT the join key)."""
-    return df.withColumn(out, F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(buckets)))
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,

@@ -240,31 +240,6 @@ def lang_id(
     )
 
 
-def lang_scores_sql(tokens_expr: str = "t") -> str:
-    """DuckDB fragment: per-language hit-ratio columns ``r_<lang>`` over a
-    lowercased token-list column — single source of truth so every oracle
-    replays the exact lang_id decision."""
-    cols = []
-    for lang, words in _STOPWORDS.items():
-        lst = "[" + ", ".join(f"'{w}'" for w in words) + "]"
-        cols.append(
-            f"len(list_filter({tokens_expr}, x -> list_contains({lst}, x)))::DOUBLE"
-            f" / greatest(len({tokens_expr}), 1) AS r_{lang}"
-        )
-    return ",\n    ".join(cols)
-
-
-def lang_best_sql() -> str:
-    """DuckDB fragment: ``list_max`` over (ratio, lang) structs — the
-    same lexicographic struct order Spark's array_max uses, so the argmax
-    (ties -> largest lang code) replays identically.  Consume as
-    ``lang_best_sql() AS best`` then ``best.r`` / ``best.l``."""
-    structs = ", ".join(
-        "{'r': r_%s, 'l': '%s'}" % (lang, lang) for lang in sorted(_STOPWORDS)
-    )
-    return f"list_max([{structs}])"
-
-
 def fingerprint(
     df: DataFrame,
     text_col: str = "text",

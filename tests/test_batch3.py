@@ -2588,26 +2588,32 @@ def test_psi_drift_detects_planted_shift(spark):
 def test_dup_components_driver_gate_equals_distributed(spark):
     """The size-gated driver union-find path must produce exactly the
     distributed min-label loop's output (same clusters, same schema) —
-    the gate may only change the physical strategy."""
-    from pyspark.sql import functions as F
-
+    the gate may only change the physical strategy.  With n distinct
+    pairs the driver path runs iff ``2 * n <= driver_gate_edges``: at
+    the edge (2n) the limit-probe comes back short and is the pair
+    list; two below it the probe comes back full and the distributed
+    loop runs.  Duplicate input rows do not count toward n."""
     from kats_spark.operators.dedup import dup_components
 
     rng_pairs = [
         (1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21),
         (30, 31), (31, 32), (32, 33), (33, 30), (5, 40), (40, 41),
     ]
-    df = spark.createDataFrame(rng_pairs, "id_a bigint, id_b bigint")
-    fast = sorted(
-        (r.doc_id, r.cluster_id) for r in dup_components(df).collect()
+    df = spark.createDataFrame(
+        rng_pairs + rng_pairs[:4], "id_a bigint, id_b bigint"
     )
-    assert dup_components.last_rounds == 0  # gate took the driver path
-    slow = sorted(
-        (r.doc_id, r.cluster_id)
-        for r in dup_components(df, driver_gate_edges=0).collect()
-    )
-    assert dup_components.last_rounds > 0  # forced distributed
-    assert fast == slow
+    n = len(rng_pairs)
+    out = {}
+    # (gate, driver path?): 1M default, the edge, past it, forced
+    gates = ((1_000_000, True), (2 * n, True), (2 * n - 2, False), (0, False))
+    for gate, driver in gates:
+        out[gate] = sorted(
+            (r.doc_id, r.cluster_id)
+            for r in dup_components(df, driver_gate_edges=gate).collect()
+        )
+        assert (dup_components.last_rounds == 0) == driver, gate
+    assert len({tuple(v) for v in out.values()}) == 1, out
+    assert out[0][:3] == [(1, 1), (2, 1), (3, 1)]
 
 
 def test_salted_cumsum_equals_naive(spark):

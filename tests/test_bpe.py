@@ -57,6 +57,20 @@ def test_bpe_train_distributed_equals_driver(spark):
     pd.testing.assert_frame_equal(driver, dist)
 
 
+def test_bpe_train_gate_probe_job_budget(spark, sf_dir, count_jobs):
+    """The vocabulary size gate is one limit-probe that decides and
+    collects: the unpersisted (word, freq) table's tokenize + groupBy
+    runs once, not once for a count() and again for the collect.  The
+    call plus its action started 6 jobs with the count."""
+    from kats_spark.operators.bpe import bpe_train
+    from kats_spark.sources.load import read_parquet
+
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
+    with count_jobs() as jobs:
+        bpe_train(docs, num_merges=20).toPandas()
+    assert len(jobs) <= 4, jobs
+
+
 def test_bpe_encode_stats_hand_computed(spark):
     """Encoding under the fixture's first 4 merges: low -> [lo, w</w>]
     (2), lower -> [lo, w, e, r</w>] (4), newest -> [n, ew, est</w>]

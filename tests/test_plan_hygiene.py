@@ -195,3 +195,33 @@ def test_parquet_filter_pushdown_reaches_scan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan
     assert "IsNotNull(doc_id)" in plan or "LessThan(doc_id" in plan or "GreaterThanOrEqual(doc_id" in plan
+
+
+def test_dup_clusters_gate_probe_job_budget(spark, count_jobs):
+    """The dup_components size gate is one limit-probe that decides and
+    collects (no count() before the collect), and simhash_pairs keeps no
+    chunk-row persist (no cache-fill jobs).  The call plus its action
+    started 9 jobs with both; 5 without."""
+    import __spark_entry__ as entry
+
+    q = entry.queries()["dup_clusters"]
+    with count_jobs() as jobs:
+        q(spark, SF).toPandas()
+    assert len(jobs) <= 5, jobs
+
+
+def test_simhash_neardup_reuses_the_fingerprint_exchange(spark):
+    """Both sides of the simhash band self-join derive from one
+    fingerprint subtree.  AQE reuses its exchange, so the executed plan
+    scans ``documents`` once and needs no persist: one FileScan, a
+    ReusedExchange, and no InMemoryTableScan in the final plan."""
+    import __spark_entry__ as entry
+
+    df = entry.queries()["simhash_neardup"](spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
+    assert final.count("FileScan parquet") == 1, final
+    assert "documents.parquet" in df.inputFiles()[0]
+    assert "ReusedExchange" in final, final
+    assert "InMemoryTableScan" not in final, final

@@ -2,6 +2,10 @@
 
 Usage: python tools/oracle_replay.py [sf_dir] [--only a,b,c]
 
+The session comes from ``kats_spark.session.get_spark``: set
+``SPARK_GRAFT_CPUS`` (default 32) and ``SPARK_DRIVER_MEMORY`` (default
+8g) to size it for the box.
+
 Unlike driver_sim (rows/err only), this runs harness.compare — the same
 value-hash the external driver applies — for every queries() entry that
 declares an oracle.  Prints one line per query and a final tally.
@@ -16,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from kats_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -26,12 +30,7 @@ def main() -> None:
         if a == "--only":
             only = set(sys.argv[i + 1].split(","))
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.ui.enabled", "false")
-        .appName("oracle-replay")
-        .getOrCreate()
-    )
+    spark = get_spark("oracle-replay")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry
