@@ -76,12 +76,12 @@ HEADLINE = [
     # weakly-supervised quality classifier, GP-EI search, global-model
     # ensemble + its holdout backtest.  Since r08 the two ensemble rows
     # amortize like the stored-index rows below: the first rep trains
-    # the G replicas and memoizes the weights per (gateway, sf_dir)
-    # (models/global_rnn.py _WEIGHTS_MEMO — bit-identical to retraining,
+    # the G replicas and kats_spark.cache keeps the weights, keyed on the
+    # content fingerprint of events.parquet (bit-identical to retraining,
     # tested), later reps measure the steady-state inference plan, so
     # best-of-N records the amortized number a standing model serves.
-    # Since r14 ml_ar_insample amortizes the same way (_MODEL_MEMO,
-    # memo-hit == fresh-fit pinned in tests/test_ml.py) and every
+    # Since r14 ml_ar_insample amortizes the same way (the cache's model
+    # entry, memo-hit == fresh-fit pinned in tests/test_ml.py) and every
     # query's FIRST-rep time lands in BENCH_FULL.json so the cold cost
     # stays adjudicable.
     "ivfpq_recall",
@@ -222,9 +222,10 @@ def main() -> None:
     rep_counts: dict[str, int] = {}
     # r14 (VERDICT r13 item #4): record each query's FIRST-rep time too,
     # so rows that amortize deliberately (stored indexes, global-ensemble
-    # weights, ml_ar model memo, prepared plans) expose their cold cost
-    # in BENCH_FULL.json next to the best-of-N steady state.  Additions
-    # only — the final stdout line and its `queries` dict are unchanged.
+    # weights, ml_ar model, prepared plans: kats_spark.cache entries)
+    # expose their cold cost in BENCH_FULL.json next to the best-of-N
+    # steady state.  Additions only — the final stdout line and its
+    # `queries` dict are unchanged.
     first_reps: dict[str, float] = {}
     # machine-checkable box-load discipline (VERDICT r10 item #4): the
     # artifact itself records host load at start/end plus per-query rep

@@ -74,9 +74,9 @@ def kats_ensemble_forecast(
     # source into one materialization each (seas/decision are tiny —
     # period rows resp. 1 row per series; prepared is one row per input
     # point, the price of model fan-out without recompute).  All three
-    # route through the boundary registry so a plan-memoized caller
+    # are registered with kats_spark.cache so a plan-memoized caller
     # re-registers them after an external clearCache().
-    from kats_spark import boundary
+    from kats_spark import cache
 
     if method == "stl":
         from kats_spark.operators.decomposition import (
@@ -85,9 +85,9 @@ def kats_ensemble_forecast(
             strengths_from_decomposition,
         )
 
-        dec = boundary.register(decompose(df, period, "additive", "stl", s).persist())
-        seas = boundary.register(last_period_seasonal_table(dec, period, s).persist())
-        decision = boundary.register(
+        dec = cache.register(decompose(df, period, "additive", "stl", s).persist())
+        seas = cache.register(last_period_seasonal_table(dec, period, s).persist())
+        decision = cache.register(
             strengths_from_decomposition(dec, s)
             .select(
                 s.series_id,
@@ -111,12 +111,12 @@ def kats_ensemble_forecast(
             )
             .persist()
         )
-        prepared = boundary.register(prepared)
+        prepared = cache.register(prepared)
     else:
-        seas = boundary.register(
+        seas = cache.register(
             seasonal_table(df, period, "additive", s).persist()
         )
-        decision = boundary.register(
+        decision = cache.register(
             strength_features(df, period, s)
             .select(
                 s.series_id,
@@ -141,7 +141,7 @@ def kats_ensemble_forecast(
             )
             .persist()
         )
-        prepared = boundary.register(prepared)
+        prepared = cache.register(prepared)
     n_tbl = df.groupBy(s.series_id).agg(F.count("*").alias("__n"))
     w = Window.partitionBy(s.series_id).orderBy(s.time)
     reseasoned = []

@@ -62,9 +62,9 @@ def std_global_forecast(
     # persist(), not a lazy localCheckpoint: the checkpoint converts the
     # plan to an RDD at call time (~1 s of physical planning, r13
     # measurement); the registered persist is the same boundary for free
-    from kats_spark import boundary
+    from kats_spark import cache
 
-    dec = boundary.register(
+    dec = cache.register(
         decompose(df, period, decomposition, "stl", s).persist()
     )
     seas = last_period_seasonal_table(dec, period, s).persist()

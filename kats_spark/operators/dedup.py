@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kats_spark import boundary
+from kats_spark import cache
 from kats_spark.operators.text import tokens
 
 # Mersenne prime for the affine minhash permutations; 2^31-1 keeps
@@ -256,7 +256,6 @@ def jaccard_allpairs(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    persist_registry: list | None = None,
 ) -> DataFrame:
     """EXACT all-pairs Jaccard >= threshold with prefix filtering
     (Bayardo et al. AllPairs / PPJoin candidate generation).
@@ -270,11 +269,6 @@ def jaccard_allpairs(
     almost never appear in prefixes, so the candidate join is near-linear.
     Verification computes exact Jaccard on the full shingle arrays, so the
     result set is IDENTICAL to the naive plan (same DuckDB oracle).
-
-    ``persist_registry``: callers that memoize this plan across an
-    external ``clearCache()`` (see plans.pipeline_queries._corpus_stages)
-    pass a list to receive the internally-persisted frames so their
-    cache registrations can be re-established on reuse.
 
     Shuffle discipline (the part that survives a 100x scale-up): the
     shingle window, the (id, g) dedup, and the per-doc prefix aggregation
@@ -293,11 +287,9 @@ def jaccard_allpairs(
     # ex feeds BOTH the document-frequency agg and the per-doc join below —
     # without a persist the whole shingle pipeline (scan + normalize regex +
     # posexplode + n-gram window + distinct) executes twice per action
-    ex = boundary.register(
+    ex = cache.register(
         shingle_rows(df, text_col, id_col, shingle_n).persist()
     )
-    if persist_registry is not None:
-        persist_registry.append(ex)
     freq = ex.groupBy("g").agg(F.count("*").alias("__df"))
     # per-doc row: full shingle array + the (df, g)-sorted prefix, built in
     # ONE aggregation (array_sort on structs orders by df asc, then g asc
@@ -321,9 +313,7 @@ def jaccard_allpairs(
         .drop("__ranked")
         .persist()
     )
-    sh = boundary.register(sh)
-    if persist_registry is not None:
-        persist_registry.append(sh)
+    sh = cache.register(sh)
     prefix = sh.select(id_col, "__sz", F.explode("__prefix").alias("g"))
     a = prefix.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("sz_a"), "g")
     b = prefix.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("sz_b"), "g")

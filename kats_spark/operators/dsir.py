@@ -364,9 +364,9 @@ def source_overlap(
     )
     from pyspark import StorageLevel
 
-    from kats_spark import boundary
+    from kats_spark import cache
 
-    sig = boundary.register(
+    sig = cache.register(
         ex.groupBy("__g")
         .agg(F.expr(f"array({mins})").alias("__sig"))
         .persist(StorageLevel.MEMORY_AND_DISK)

@@ -252,9 +252,9 @@ def diversity_sample(
     # chain AND the final ranking, and without the boundary the whole
     # Lloyd build + assignment executed three times per action (r13 plan
     # audit: 32 parquet scans, zero ReusedExchange → one pipeline).
-    from kats_spark import boundary
+    from kats_spark import cache
 
-    scored = boundary.register(
+    scored = cache.register(
         indexed.join(F.broadcast(centers), "cell_id")
         .withColumn("dist", dist)
         .select(id_col, "cell_id", "dist")

@@ -545,9 +545,9 @@ def phash_neardup_pairs(
     # persist(), not localCheckpoint: a lazy checkpoint converts the plan
     # to an RDD at call time (~1 s of physical planning), persist
     # registers the same boundary for free.
-    from kats_spark import boundary
+    from kats_spark import cache
 
-    fp = boundary.register(fp.persist())
+    fp = cache.register(fp.persist())
     return simhash_pairs(
         fp, max_hamming=max_hamming, id_col=id_col, fp_col="phash"
     )

@@ -301,14 +301,14 @@ def ivfpq_build(
 
     from pyspark import StorageLevel
 
-    from kats_spark import boundary
+    from kats_spark import cache
 
     # persist the residual frame: the codebook sample scan AND the
     # encode pass both consume it — without the boundary the coarse
     # assignment (argmin over n_cells dot products per vector) executes
     # twice per build (r13; at 100 TB the same boundary is an
     # intermediate write, the _corpus_stages pattern)
-    resid = boundary.register(
+    resid = cache.register(
         indexed.join(F.broadcast(centers_df), "cell_id")
         .select(
             id_col,
@@ -537,9 +537,9 @@ def build_portable(
     # persist(), not localCheckpoint: a lazy checkpoint converts the plan
     # to an RDD at call time (~1 s of physical planning), persist
     # registers the same boundary for free.
-    from kats_spark import boundary
+    from kats_spark import cache
 
-    sub = boundary.register(_subspaces(df, vec_col, id_col, m, dim).persist())
+    sub = cache.register(_subspaces(df, vec_col, id_col, m, dim).persist())
     seeds = sub.filter(F.col(id_col) < ks).select(
         "j", F.col(id_col).cast("int").alias("code"), F.col("s").alias("center")
     )

@@ -17,6 +17,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kats_spark import cache
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -111,43 +113,37 @@ def all_pairs_topk(
     cross-engine determinism) and ranked (score desc, id asc) — ties on the
     rounded score resolve identically everywhere.
 
-    ``memo_key`` (prepared-statement pattern, VERDICT r07 item #4): a
-    caller-supplied identity for an IMMUTABLE index source (e.g. the
-    embeddings parquet path).  The driver-side index build — count +
-    collect + the two broadcasts — is memoized per (py4j gateway,
-    memo_key, vec/id cols): repeat calls reuse the live broadcasts
-    instead of re-collecting the corpus per call.  Broadcast variables
-    live outside the DataFrame cache manager, so an external
-    ``clearCache()`` (the bench harness between reps) does not drop
-    them.  Single-shard only — the sharded path destroys its broadcasts
-    per shard BY DESIGN to bound driver memory.  Memo-hit output is
-    bit-identical to a fresh build (asserted in tests).
+    ``memo_key`` (prepared-statement pattern): a caller-supplied CONTENT
+    identity of the index source (e.g. its ``source_fingerprint``).  The
+    driver-side index build — probe + collect + the two broadcasts — is
+    memoized in ``kats_spark.cache`` per (memo_key, vec/id cols,
+    shard_rows): repeat calls reuse the live broadcasts instead of
+    re-collecting the corpus per call.  Broadcast variables live outside
+    the DataFrame cache manager, so an external ``clearCache()`` (the
+    bench harness between reps) does not drop them.  Single-shard only —
+    the sharded path destroys its broadcasts per shard BY DESIGN to bound
+    driver memory.  Memo-hit output is bit-identical to a fresh build
+    (asserted in tests).
     """
-    import numpy as np
-    import pandas as pd
-
     spark = df.sparkSession
-    mkey = None
-    probe_pdf = None
-    if memo_key is not None:
-        mkey = (_ctx_key(spark.sparkContext), memo_key, vec_col, id_col)
-        hit = _INDEX_MEMO.get(mkey)
-    else:
-        hit = None
-    if hit is not None:
-        n_total = hit[0]
-    else:
+
+    def probe():
         # limit-probe instead of a separate count() job: collect up to
         # shard_rows+1 rows — if everything fits, that IS the index (one
         # scan builds it, no count pass); only oversize corpora pay the
         # count and take the sharded path.
-        probe_pdf = df.select(id_col, vec_col).limit(shard_rows + 1).toPandas()
-        if len(probe_pdf) <= shard_rows:
-            n_total = len(probe_pdf)
-        else:
-            probe_pdf = None
-            n_total = df.count()
-    n_shards = max(1, -(-n_total // shard_rows))
+        pdf = df.select(id_col, vec_col).limit(shard_rows + 1).toPandas()
+        if len(pdf) > shard_rows:
+            return (df.count(),)
+        return (len(pdf), *_broadcast_index(spark, pdf, vec_col, id_col))
+
+    if memo_key is None:
+        index = probe()
+    else:
+        index = cache.memo(
+            "allpairs_index", (memo_key, vec_col, id_col, shard_rows), probe
+        )
+    n_shards = max(1, -(-index[0] // shard_rows))
     if n_shards > 1:
         from pyspark.sql import Window
 
@@ -156,15 +152,10 @@ def all_pairs_topk(
             shard = df.filter(
                 F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)) == si
             )
-            cand, handles = _topk_vs_index(
-                queries=df,
-                index_df=shard,
-                k=k,
-                vec_col=vec_col,
-                id_col=id_col,
-                round_decimals=round_decimals,
-                return_handles=True,
+            handles = _broadcast_index(
+                spark, shard.select(id_col, vec_col).toPandas(), vec_col, id_col
             )
+            cand = _topk_vs_index(df, handles, k, vec_col, id_col, round_decimals)
             # Materialize this shard's candidates NOW (lineage truncated),
             # then free the shard's broadcast index before collecting the
             # next shard — otherwise every shard's ids+matrix coexist on
@@ -180,87 +171,38 @@ def all_pairs_topk(
             allc.withColumn("rk", F.row_number().over(w).cast("int"))
             .filter(F.col("rk") <= k)
         )
-    return _topk_vs_index(
-        queries=df,
-        index_df=df,
-        k=k,
-        vec_col=vec_col,
-        id_col=id_col,
-        round_decimals=round_decimals,
-        memo_key=mkey,
-        index_pdf=probe_pdf,
-    )
+    return _topk_vs_index(df, index[1:], k, vec_col, id_col, round_decimals)
 
 
-# (context key, caller memo_key, vec_col, id_col) -> (n_rows, b_ids,
-# b_mat): live broadcast handles of an immutable index, reused across
-# repeat builds of the same declared query (see all_pairs_topk
-# docstring).
-_INDEX_MEMO: dict = {}
+def _broadcast_index(spark, pdf, vec_col: str, id_col: str) -> tuple:
+    """(ids, L2-normalized matrix) broadcasts of a collected (id, vec)
+    frame, sorted by id: matrix row j holds the vector of id-rank j."""
+    import numpy as np
 
-
-def _ctx_key(sc) -> tuple:
-    """Stable SparkContext identity for memo keys: (applicationId,
-    startTime) is unique per live context, unlike ``id(gateway)`` which
-    CPython can recycle after GC — a recycled address could hand back
-    broadcasts bound to a stopped context."""
-    return (sc.applicationId, sc.startTime)
-
-
-def clear_index_memo() -> None:
-    for _, b_ids, b_mat in _INDEX_MEMO.values():
-        try:
-            b_ids.destroy()
-            b_mat.destroy()
-        except Exception:
-            pass
-    _INDEX_MEMO.clear()
+    ids = pdf[id_col].to_numpy()
+    order0 = np.argsort(ids, kind="stable")
+    mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)[order0]
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    sc = spark.sparkContext
+    return sc.broadcast(ids[order0]), sc.broadcast(mat)
 
 
 def _topk_vs_index(
     queries: DataFrame,
-    index_df: DataFrame,
+    index: tuple,
     k: int,
     vec_col: str,
     id_col: str,
     round_decimals: int,
-    return_handles: bool = False,
-    memo_key: tuple | None = None,
-    index_pdf=None,
-):
+) -> DataFrame:
     """Per-query top-k against ONE broadcast index shard (exact, rounded
-    scores, self-pair excluded).  With ``return_handles`` the two index
-    broadcasts are returned alongside the frame so the caller can destroy
-    them once the frame is materialized (sharded-path memory bound).
-    ``memo_key`` (mutually exclusive with ``return_handles``) reuses /
-    stores the collected index broadcasts in ``_INDEX_MEMO``.
-    ``index_pdf``: the caller's already-collected (id, vec) frame — the
-    limit-probe from all_pairs_topk — so the build skips its own scan."""
+    scores, self-pair excluded); ``index`` is ``_broadcast_index``'s
+    (ids, matrix) pair."""
     import numpy as np
     import pandas as pd
 
     df = queries
-    spark = df.sparkSession
-    hit = _INDEX_MEMO.get(memo_key) if memo_key is not None else None
-    if hit is not None:
-        _, b_ids, b_mat = hit
-    else:
-        pdf = (
-            index_pdf
-            if index_pdf is not None
-            else index_df.select(id_col, vec_col).toPandas()
-        )
-        ids = pdf[id_col].to_numpy()
-        order0 = np.argsort(ids, kind="stable")  # index sorted by id: column j has id-rank j
-        ids = ids[order0]
-        mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)[order0]
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        b_ids = spark.sparkContext.broadcast(ids)
-        b_mat = spark.sparkContext.broadcast(mat)
-        if memo_key is not None:
-            if len(_INDEX_MEMO) > 64:  # dead-gateway hygiene
-                clear_index_memo()
-            _INDEX_MEMO[memo_key] = (len(ids), b_ids, b_mat)
+    b_ids, b_mat = index
 
     def score(batches):
         index_ids, index = b_ids.value, b_mat.value
@@ -297,12 +239,9 @@ def _topk_vs_index(
             if len(out):
                 yield out
 
-    out = df.select(id_col, vec_col).mapInPandas(
+    return df.select(id_col, vec_col).mapInPandas(
         score, schema="id_a bigint, id_b bigint, cos_sim double, rk int"
     )
-    if return_handles:
-        return out, (b_ids, b_mat)
-    return out
 
 
 def lsh_planes(num_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
@@ -407,9 +346,8 @@ def banded_lsh_candidates(
     # plane-dot projection AND the input scan run twice per action (same
     # disease as simhash_pairs; see that docstring).  (id, band, bucket)
     # ints only — slim to cache at any corpus size.
-    from kats_spark import boundary
 
-    keyed = boundary.register(
+    keyed = cache.register(
         df.select(
             F.col(id_col),
             F.posexplode(F.expr(band_arr)).alias("band", "bucket"),
@@ -462,27 +400,17 @@ def embedding_neardup_pairs(
     default.  Pass True/False to force.
 
     ``memo_key`` (prepared-statement pattern, same contract as
-    ``all_pairs_topk``): caller-supplied identity of an IMMUTABLE
-    corpus; the index build (collect + normalize + two broadcasts) is
-    memoized per (context, memo_key, vec/id cols) so repeat calls reuse
-    the live broadcasts.  Memo-hit output is bit-identical to a fresh
-    build (the broadcast payload IS the build)."""
+    ``all_pairs_topk``): caller-supplied CONTENT identity of the corpus;
+    the index build (collect + normalize + two broadcasts) is memoized
+    in ``kats_spark.cache`` so repeat calls reuse the live broadcasts.
+    Memo-hit output is bit-identical to a fresh build (the broadcast
+    payload IS the build)."""
     cand = banded_lsh_candidates(
         df, bands, planes_per_band, seed, dim, vec_col, id_col, dedup=False
     )
     if prefilter is None or prefilter:
-        import numpy as np
 
-        spark = df.sparkSession
-        mkey = (
-            ("neardup", _ctx_key(spark.sparkContext), memo_key, vec_col, id_col)
-            if memo_key is not None
-            else None
-        )
-        hit = _INDEX_MEMO.get(mkey) if mkey is not None else None
-        if hit is not None:
-            _, b_ids, b_mat = hit
-        else:
+        def probe():
             # limit-probe: collect up to max_rows+1 — if everything fits
             # that IS the index (one scan, no count pass); an oversize
             # corpus under auto-select falls through to the pure-SQL path
@@ -490,21 +418,22 @@ def embedding_neardup_pairs(
             sel = df.select(id_col, vec_col)
             pdf = (sel if limit_n is None else sel.limit(limit_n)).toPandas()
             if prefilter is None and len(pdf) > prefilter_max_rows:
-                b_ids = None
-            else:
-                ids0 = pdf[id_col].to_numpy()
-                order0 = np.argsort(ids0, kind="stable")
-                ids_sorted = ids0[order0]
-                mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)[order0]
-                mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-                b_ids = spark.sparkContext.broadcast(ids_sorted)
-                b_mat = spark.sparkContext.broadcast(mat)
-                if mkey is not None:
-                    _INDEX_MEMO[mkey] = (len(pdf), b_ids, b_mat)
-        prefilter = b_ids is not None
+                return None
+            return _broadcast_index(df.sparkSession, pdf, vec_col, id_col)
+
+        if memo_key is None:
+            index = probe()
+        else:
+            index = cache.memo(
+                "neardup_index",
+                (memo_key, vec_col, id_col, prefilter, prefilter_max_rows),
+                probe,
+            )
+        prefilter = index is not None
     if prefilter:
         import numpy as np
 
+        b_ids, b_mat = index
         cut = float(threshold) - 1.0e-6
 
         def screen(batches):
@@ -605,9 +534,8 @@ def semantic_dedup(
     # while persist registers the same executor-local boundary for free.
     # The frame is the corpus projected to (id, vec, cell, dist) — same
     # width the join needs anyway.
-    from kats_spark import boundary
 
-    withd = boundary.register(withd.persist())
+    withd = cache.register(withd.persist())
     a = withd.select(
         "cell_id",
         F.col(id_col).alias("id_a"),
@@ -1070,9 +998,8 @@ def bitext_margin_pairs_ann(
         # persist(), not localCheckpoint: a lazy checkpoint converts the
         # plan to an RDD at call time (~1 s of physical planning),
         # persist registers the same boundary for free.
-        from kats_spark import boundary
 
-        scored = boundary.register(scored.persist())
+        scored = cache.register(scored.persist())
     return _margin_tail(scored, k, threshold, hint_broadcast_avgs=False)
 
 

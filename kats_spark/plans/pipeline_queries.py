@@ -12,11 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kats_spark import boundary
+from kats_spark import cache
+from kats_spark.cache import prepared
 from kats_spark.operators import dedup, similarity, text
 from kats_spark.operators.sampling import salted_cumsum
 from kats_spark.plans import eig_oracle as _EIG_ORACLE
-from kats_spark.plans.prepared import prepared
 from kats_spark.sources.load import read_parquet
 
 
@@ -33,7 +33,7 @@ def _rnd(col, d=6):
 # dedup
 # --------------------------------------------------------------------------
 
-@prepared()
+@prepared
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = dedup.exact_dedup(docs)
@@ -49,7 +49,7 @@ FROM keyed GROUP BY norm
 """
 
 
-@prepared()
+@prepared
 def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (threshold 0.5) via the
     prefix-filtered AllPairs plan (dedup.jaccard_allpairs) — identical
@@ -91,7 +91,7 @@ WHERE inter / (sz_a + sz_b - inter) >= 0.5
 """
 
 
-@prepared()
+@prepared
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs — approximate (Spark xxhash64-based), so
     declared rows-only (no SQL oracle can reproduce the hash family)."""
@@ -114,7 +114,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text analysis
 # --------------------------------------------------------------------------
 
-@prepared()
+@prepared
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = text.word_stats(docs)
@@ -357,7 +357,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kats_spark.operators.bpe import bpe_train
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    return bpe_train(docs, num_merges=20).orderBy("rank")
+    return bpe_train(docs, num_merges=20)
 
 
 # fixed merge list for the ORACLED encode query: the corpus's own first
@@ -475,7 +475,7 @@ FROM per
 """
 
 
-@prepared()
+@prepared
 def q_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS winnowing fingerprints (k=20 char grams, window 32; guarantee
     length w+k-1=51 chars) — the rolling-hash overlap-detection layer
@@ -522,7 +522,7 @@ FROM m WHERE pos >= {w}
 """
 
 
-@prepared()
+@prepared
 def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial-overlap pairs via shared winnowing fingerprints: the case
     whole-document dedup misses (one doc quoting a chunk of another).
@@ -536,7 +536,7 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the boundary the whole winnowing pipeline (char-gram rolling hash +
     # window minima) executes once per consumer (r13 plan audit: three
     # full winnow subtrees).  (doc_id, fp_hash) longs only.
-    fp = boundary.register(
+    fp = cache.register(
         text.winnow_fingerprints(docs, k=20, w=32)
         .select(F.col("doc_id").cast("bigint").alias("doc_id"), "fp_hash")
         .distinct()
@@ -609,12 +609,13 @@ SELECT vec_id, cos_sim FROM scored ORDER BY cos_sim DESC, vec_id ASC LIMIT 20
 def q_allpairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs cosine top-3 neighbors per vector via the broadcast
     numpy index (ranked on the rounded score so ordering is fp-stable
-    across engines).  The index build (count + collect + broadcast of the
-    immutable embeddings parquet) is memoized per (gateway, sf_dir) —
+    across engines).  The index build (probe + collect + broadcast of the
+    embeddings parquet) is memoized on the file's content fingerprint —
     the prepared-statement pattern applied to the one driver-side cost
-    this query has (VERDICT r07 item #4)."""
-    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    return similarity.all_pairs_topk(emb, k=3, memo_key=f"allpairs:{sf_dir}")
+    this query has."""
+    src = f"{sf_dir}/embeddings.parquet"
+    emb = read_parquet(spark, src)
+    return similarity.all_pairs_topk(emb, k=3, memo_key=cache.fingerprint(src))
 
 
 _Q_ALLPAIRS_SQL = """
@@ -636,7 +637,7 @@ FROM ranked WHERE rk <= 3
 """
 
 
-@prepared()
+@prepared
 def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Margin-based bitext mining (similarity.bitext_margin_pairs,
     Artetxe & Schwenk 2019 ratio margin / CCMatrix): best target match
@@ -692,7 +693,7 @@ FROM best WHERE rk = 1 AND mr > 1.0 ORDER BY x_id
 """
 
 
-@prepared()
+@prepared
 def q_bitext_mine_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN-composed bitext mining (similarity.bitext_margin_pairs_ann —
     the CCMatrix scale path): portable-IVF candidate pairs from probing
@@ -958,9 +959,10 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4 bands x 4 planes) verified with the exact rounded cosine >= 0.4.
     Plane constants are inlined into the oracle, so the whole approximate
     pipeline — candidate generation AND verification — hash-matches."""
-    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
+    src = f"{sf_dir}/embeddings.parquet"
+    emb = read_parquet(spark, src)
     out = similarity.embedding_neardup_pairs(
-        emb, threshold=0.4, memo_key=f"neardup:{sf_dir}"
+        emb, threshold=0.4, memo_key=cache.fingerprint(src)
     )
     return out.select(
         F.col("id_a").cast("bigint").alias("id_a"),
@@ -972,9 +974,10 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embed_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy keep-smallest-id dedup over the near-dup pairs (id_a < id_b
     always, so dropped = appears-as-id_b): one left-anti join."""
-    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
+    src = f"{sf_dir}/embeddings.parquet"
+    emb = read_parquet(spark, src)
     pairs = similarity.embedding_neardup_pairs(
-        emb, threshold=0.4, memo_key=f"neardup:{sf_dir}"
+        emb, threshold=0.4, memo_key=cache.fingerprint(src)
     )
     return similarity.neardup_survivors(emb, pairs).select(
         F.col("vec_id").cast("bigint").alias("vec_id")
@@ -1040,49 +1043,19 @@ WHERE e.vec_id NOT IN (SELECT id_b FROM verified WHERE cos_sim >= 0.4)
 # near-dup removal -> surviving docs with token counts)
 # --------------------------------------------------------------------------
 
-_PERSISTED: list = []
-_STAGE_MEMO: dict = {}
-
-
-def release_corpus_cache() -> None:
-    """Unpersist frames cached by ``_corpus_stages``.  Called
-    automatically when stages are REBUILT for a different (gateway,
-    sf_dir) key (so the session holds at most one cached stage set);
-    callers that want a fully clean session can invoke it directly after
-    collecting their result."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:  # session already gone — nothing to release
-            pass
-
-
+@prepared
 def _corpus_stages(spark: SparkSession, sf_dir: str):
     """Shared corpus-prep stage frames: (docs, kept, exact, final).
 
-    The constructed frames are MEMOIZED per (py4j gateway, sf_dir): the
-    stage plan is ~1 s of driver-side py4j Column construction plus two
-    persist-forced Catalyst analyses, a fixed cost that real pipelines
-    pay once (the prepared-statement pattern) but that repeated query
-    calls in one session were paying per call — the source of
-    corpus_prep's round-over-round bench creep on unchanged plans.
-    DataFrame plans are immutable, so reuse is safe; the persist
-    boundaries are re-registered on every hit because an external
-    ``spark.catalog.clearCache()`` (the bench harness does this between
-    reps) silently drops them, and without the boundary the AllPairs
-    self-join re-executes the whole scoring scan per side."""
-    sc = spark.sparkContext
-    key = ((sc.applicationId, sc.startTime), sf_dir)
-    hit = _STAGE_MEMO.get(key)
-    if hit is not None:
-        frames, out = hit
-        for f in frames:  # no-op if still registered; re-registers after
-            f.persist()   # an external clearCache
-        return out
-    # new key: drop stale memo entries + release their cached frames so
-    # at most one stage set stays materialized per process
-    _STAGE_MEMO.clear()
-    release_corpus_cache()
+    Memoized like a declared query: the stage plan is ~1 s of
+    driver-side py4j Column construction plus two persist-forced
+    Catalyst analyses, a fixed cost that real pipelines pay once but
+    that repeated query calls in one session were paying per call.  The
+    persist boundaries are registered with the cache, which re-registers
+    them on every hit: an external ``spark.catalog.clearCache()`` (the
+    bench harness does this between reps) silently drops them, and
+    without the boundary the AllPairs self-join re-executes the whole
+    scoring scan per side."""
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     # persist the scored projection BEFORE filtering: predicate pushdown
     # substitutes computed columns into the filter, duplicating the
@@ -1091,12 +1064,11 @@ def _corpus_stages(spark: SparkSession, sf_dir: str):
     # cache is a materialization boundary — scores evaluate once, the
     # filter reads columns.  (At 100 TB the same boundary is an
     # intermediate parquet write.)
-    scored = (
+    scored = cache.register(
         text.score_and_lang(docs, keep_token_count=True)
         .select("doc_id", "text", "quality_score", "lang_pred", "n_tokens")
         .persist()
     )
-    _PERSISTED.append(scored)
     kept = scored.filter(
         (F.col("lang_pred") == "en") & (F.col("quality_score") >= 0.6)
     ).select("doc_id", "text", "quality_score", "n_tokens")
@@ -1110,13 +1082,8 @@ def _corpus_stages(spark: SparkSession, sf_dir: str):
     # persisting exact A/B-measured vs recompute-from-scored (r13): the
     # cache write pays for itself across the three consumers (8.6 s vs
     # 9.3 s for prep+build+funnel at sf0.1)
-    exact = dedup.exact_dedup(kept).persist()
-    _PERSISTED.append(exact)
-    inner: list = []
-    pairs = dedup.jaccard_allpairs(
-        exact, shingle_n=3, threshold=0.5, persist_registry=inner
-    )
-    _PERSISTED.extend(inner)
+    exact = cache.register(dedup.exact_dedup(kept).persist())
+    pairs = dedup.jaccard_allpairs(exact, shingle_n=3, threshold=0.5)
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     # final is NOT persisted: its upstream boundaries (scored, exact, the
     # AllPairs inner frames) already cache everything expensive, so
@@ -1129,9 +1096,7 @@ def _corpus_stages(spark: SparkSession, sf_dir: str):
     final = exact.join(dropped, "doc_id", "left_anti").select(
         "doc_id", "quality_score", "n_tokens"
     )
-    out = (docs, kept, exact, final)
-    _STAGE_MEMO[key] = ([scored, exact, *inner], out)
-    return out
+    return docs, kept, exact, final
 
 
 def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1242,7 +1207,7 @@ _POLY = (
 )
 
 
-@prepared()
+@prepared
 def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash over the portable polynomial hash — exact oracle."""
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
@@ -1339,7 +1304,7 @@ GROUP BY 1
 """
 
 
-@prepared()
+@prepared
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: docs with id < 20 play the eval set;
     flag training docs sharing any verbatim word-8-gram with them.
@@ -1378,7 +1343,7 @@ GROUP BY 1
 """
 
 
-@prepared()
+@prepared
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style intra-document repetition features (dup-line ratio,
     top 2-gram share, duplicated-gram occurrence ratio) — exact oracle."""
@@ -1520,7 +1485,7 @@ ORDER BY doc_id
 """
 
 
-@prepared()
+@prepared
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs via the pigeonhole band join
     (Manku/Jain/Sarma WWW'07) over the PORTABLE 16-bit fingerprint —
@@ -1799,7 +1764,7 @@ GROUP BY doc_id
 """
 
 
-@prepared()
+@prepared
 def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(source, lang) corpus profile: doc counts, token totals and
     exact interpolated token-length quantiles (p50/p90/p99) — the
@@ -1849,7 +1814,7 @@ def q_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.sketch_profile(docs, rsd=0.02)
 
 
-@prepared()
+@prepared
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf-law audit over corpus token frequencies — full oracle:
     identical normalize/tokenize, rank window, and regr_slope/regr_r2."""
@@ -1880,7 +1845,7 @@ FROM totals t CROSS JOIN fit f
 """
 
 
-@prepared()
+@prepared
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff between the corpus and a deterministically perturbed
     copy (every 7th doc text-modified, every 13th dropped, 20 synthetic
@@ -2102,7 +2067,7 @@ FROM c ORDER BY doc_id
 """
 
 
-@prepared()
+@prepared
 def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (text.py chunk_documents):
     64-token windows, 16-token overlap — the RAG/embedding prep fan-out
@@ -2205,7 +2170,7 @@ FROM ranked WHERE rk <= 3 ORDER BY id_a, rk
 """
 
 
-@prepared()
+@prepared
 def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash train/val/test split (sampling.py
     split_assign): u = md5(seed||id) first-48-bits / 2^48, compared
@@ -2278,7 +2243,7 @@ ORDER BY doc_id, epoch_ix
 """
 
 
-@prepared()
+@prepared
 def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup (dedup.py incremental_neardup_pairs): every
     97th document, truncated to its 80%-token prefix and re-id'd, plays
@@ -2309,7 +2274,7 @@ def _incremental_batch(docs):
     )
 
 
-@prepared()
+@prepared
 def q_incremental_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup against the SAVED band index
     (sources/ann_store.py): the standing corpus's MinHash band rows
@@ -2319,36 +2284,20 @@ def q_incremental_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sources.py).  Same output and oracle as
     incremental_neardup; this is the amortized daily-ingest path the
     in-line variant's one-shot plan promises."""
-    import os
-
     from kats_spark.sources.ann_store import (
         incremental_neardup_stored,
         save_band_index,
     )
 
-    sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    table = f"band_index_{sf_name}"
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    if not spark.catalog.tableExists(table):
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            "spark-warehouse",
-            table,
-        )
-        # register-or-rebuild (r14): the session catalog is in-memory, so
-        # a fresh session forgets the table; when the on-disk index is
-        # current for this source (content fingerprint + build params),
-        # re-register it instead of re-running the corpus signature pass
-        # and rewriting the files
-        _ensure_stored_index(
-            spark,
-            table,
-            path,
-            fingerprint_suffix="|band:mh16,b4,n3,s7",
-            bucket_cols=["band_id", "key"],
-            sf_dir=sf_dir,
-            build=lambda: save_band_index(docs, table, path),
-        )
+    table = _ensure_stored_index(
+        spark,
+        "band_index",
+        sf_dir,
+        fingerprint_suffix="|band:mh16,b4,n3,s7",
+        bucket_cols=["band_id", "key"],
+        build=lambda table, path: save_band_index(docs, table, path),
+    )
     out = incremental_neardup_stored(spark, table, _incremental_batch(docs))
     return out.select(
         F.col("new_id").cast("bigint").alias("new_id"),
@@ -2357,13 +2306,19 @@ def q_incremental_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_stored_index(
-    spark, table, path, fingerprint_suffix, bucket_cols, sf_dir, build, buckets=32
-):
-    """Shared register-or-rebuild gate for the stored-index queries:
-    current on-disk data (source content fingerprint + build-param
-    suffix) is RE-REGISTERED with the in-memory catalog; anything else
-    is rebuilt and fingerprint-marked.  Values are identical either way
-    — the registered table reads the exact files a fresh build writes."""
+    spark, prefix, sf_dir, fingerprint_suffix, bucket_cols, build, buckets=32
+) -> str:
+    """Register-or-rebuild gate for the stored-index queries; returns the
+    table name (``<prefix>_<sf name>``, files under the repo's
+    ``spark-warehouse``).  Runs on every build of the query: on-disk
+    data that is current for the source (content fingerprint +
+    build-param suffix) is registered with the in-memory catalog if the
+    session has not yet (a fresh session forgets it); anything else is
+    rebuilt with ``build(table, path)`` — replacing a registered table —
+    and fingerprint-marked.  Values are identical either way: the
+    registered table reads the exact files a fresh build writes."""
+    import os
+
     from kats_spark.sources.ann_store import (
         mark_stored,
         register_bucketed_table,
@@ -2371,12 +2326,20 @@ def _ensure_stored_index(
         stored_is_current,
     )
 
+    sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
+    table = f"{prefix}_{sf_name}"
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
+        "spark-warehouse",
+        table,
+    )
     fp = source_fingerprint(f"{sf_dir}/documents.parquet") + fingerprint_suffix
-    if stored_is_current(path, fp):
-        register_bucketed_table(spark, table, path, bucket_cols, buckets)
-    else:
-        build()
+    if not stored_is_current(path, fp):
+        build(table, path)
         mark_stored(path, fp)
+    elif not spark.catalog.tableExists(table):
+        register_bucketed_table(spark, table, path, bucket_cols, buckets)
+    return table
 
 
 def _incremental_neardup_sql(num_hashes: int = 16, bands: int = 4, seed: int = 7) -> str:
@@ -2430,7 +2393,7 @@ ORDER BY new_id, corpus_id
 """
 
 
-@prepared()
+@prepared
 def q_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SimHash near-dup (dedup.incremental_simhash_pairs):
     the same arriving batch as incremental_neardup (every 97th doc, 80%
@@ -2451,7 +2414,7 @@ def q_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("new_id", "corpus_id")
 
 
-@prepared()
+@prepared
 def q_incremental_simhash_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SimHash against the SAVED chunk index
     (ann_store.save_simhash_index): the corpus fingerprint pass persists
@@ -2459,32 +2422,22 @@ def q_incremental_simhash_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch joins it with no corpus-side exchange — completing the
     stored-index trio (MinHash bands / span grams / simhash chunks).
     Same output and oracle as incremental_simhash."""
-    import os
-
     from kats_spark.sources.ann_store import (
         incremental_simhash_stored,
         save_simhash_index,
     )
 
-    sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    table = f"simhash_index_{sf_name}"
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    if not spark.catalog.tableExists(table):
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            "spark-warehouse",
-            table,
-        )
-        # register-or-rebuild (r14) — see q_incremental_neardup_stored
-        _ensure_stored_index(
-            spark,
-            table,
-            path,
-            fingerprint_suffix="|simhash:bits24,bands2",
-            bucket_cols=["band", "chunk"],
-            sf_dir=sf_dir,
-            build=lambda: save_simhash_index(docs, table, path, bits=24, bands=2),
-        )
+    table = _ensure_stored_index(
+        spark,
+        "simhash_index",
+        sf_dir,
+        fingerprint_suffix="|simhash:bits24,bands2",
+        bucket_cols=["band", "chunk"],
+        build=lambda table, path: save_simhash_index(
+            docs, table, path, bits=24, bands=2
+        ),
+    )
     out = incremental_simhash_stored(
         spark, table, _incremental_batch(docs), max_hamming=1, bands=2, bits=24
     )
@@ -2573,7 +2526,7 @@ FROM r WHERE bucket_rank <= 30 ORDER BY doc_id
 """
 
 
-@prepared()
+@prepared
 def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicated-span fraction (dedup.py dup_span_fraction): per doc,
     the share of its 20-token windows occurring in >= 2 documents — the
@@ -2615,7 +2568,7 @@ FROM per ORDER BY doc_id
 """
 
 
-@prepared()
+@prepared
 def q_dup_span_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicated-span EXCISION (dedup.py excise_dup_spans): the removal
     step of Lee et al. 2022 — every token covered by a 5-token window
@@ -2665,7 +2618,7 @@ FROM per ORDER BY doc_id
 """
 
 
-@prepared()
+@prepared
 def q_incremental_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental duplicated-span excision (dedup.excise_vs_corpus):
     clean an arriving batch against the standing corpus — the removal
@@ -2713,7 +2666,7 @@ def _excise_batch(docs):
     )
 
 
-@prepared()
+@prepared
 def q_incremental_excise_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental span excision against the SAVED gram index
     (sources/ann_store.py save_gram_index): the standing corpus's
@@ -2722,34 +2675,22 @@ def q_incremental_excise_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     it with NO corpus-side exchange or recompute (asserted in
     tests/test_sources.py).  Same output and oracle as
     incremental_excise; this is the amortized daily-ingest path."""
-    import os
-
     from kats_spark.sources.ann_store import (
         incremental_excise_stored,
         save_gram_index,
     )
 
-    sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    table = f"gram_index_{sf_name}"
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    if not spark.catalog.tableExists(table):
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            "spark-warehouse",
-            table,
-        )
-        # register-or-rebuild (r14) — see q_incremental_neardup_stored
-        _ensure_stored_index(
-            spark,
-            table,
-            path,
-            fingerprint_suffix="|gram:span5,min1,portable",
-            bucket_cols=["gram_key"],
-            sf_dir=sf_dir,
-            build=lambda: save_gram_index(
-                docs, table, path, span_n=5, min_docs=1, portable=True
-            ),
-        )
+    table = _ensure_stored_index(
+        spark,
+        "gram_index",
+        sf_dir,
+        fingerprint_suffix="|gram:span5,min1,portable",
+        bucket_cols=["gram_key"],
+        build=lambda table, path: save_gram_index(
+            docs, table, path, span_n=5, min_docs=1, portable=True
+        ),
+    )
     out = incremental_excise_stored(
         spark, table, _excise_batch(docs), span_n=5, portable=True
     )
@@ -3637,7 +3578,7 @@ def q_mixture_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-@prepared()
+@prepared
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise source-overlap estimation (dsir.py source_overlap):
     per-source minhash signatures over word 3-gram shingles, estimated

@@ -21,8 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kats_spark import cache
+from kats_spark.cache import prepared
 from kats_spark.functions import calendar, metrics as M, rolling, stats, ta
-from kats_spark.plans.prepared import prepared
 from kats_spark.operators import decomposition, dedup, mk, resample, robust_stat
 from kats_spark.operators import similarity, statsig, text, trend
 from kats_spark.sources.load import read_parquet
@@ -92,8 +93,9 @@ def hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange ELIMINATION (canChangeCachedPlanOutputPartitioning=false
     # so windows could trust the cached layout) was A/B'd and is a net
     # LOSS — every other cached plan loses AQE coalescing; see
-    # OPTIMIZATION_r13.md.
-    return (
+    # OPTIMIZATION_r13.md.  Registered with the cache so a memoized plan
+    # over it re-registers the .cache() after an external clearCache.
+    return cache.register(
         resample.aggregate_to_grid(raw_series(spark, sf_dir), 3600, "avg")
         .repartition("series_id")
         .cache()
@@ -101,7 +103,7 @@ def hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
+    return cache.register(
         resample.aggregate_to_grid(raw_series(spark, sf_dir), 86400, "avg")
         .repartition("series_id")
         .cache()
@@ -142,7 +144,7 @@ def _r6(df: DataFrame, *cols: str) -> DataFrame:
 # flagship + relational anchors
 # --------------------------------------------------------------------------
 
-@prepared()
+@prepared
 def q_daily_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: star join (broadcast dims) -> daily revenue series per
     region -> 7-day trailing MA.  The canonical 'build a series from a fact
@@ -189,7 +191,7 @@ FROM daily
 """
 
 
-@prepared()
+@prepared
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary — the aggregate-pushdown anchor."""
     _utc(spark)
@@ -273,7 +275,7 @@ FROM spine s LEFT JOIN base b USING (series_id, time)
 """
 
 
-@prepared()
+@prepared
 def q_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear interpolation on the same sparse grid."""
     base = resample.aggregate_to_grid(
@@ -323,7 +325,7 @@ FROM f
 # rolling / detector scores
 # --------------------------------------------------------------------------
 
-@prepared()
+@prepared
 def q_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = raw_series(spark, sf_dir)
     out = df.withColumn("z", rolling.z_score(24))
@@ -402,7 +404,7 @@ FROM dev
 """
 
 
-@prepared()
+@prepared
 def q_statsig(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = statsig.statsig_scores(raw_series(spark, sf_dir), n_control=100, n_test=20)
     return _fmt_time(
@@ -503,7 +505,7 @@ LEFT JOIN ties t ON p.series_id = t.series_id
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_mk_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = mk.mk_rolling(hourly_series(spark, sf_dir), window_size=24)
     return _fmt_time(_r6(out, "mk_s", "tau"))
@@ -528,7 +530,7 @@ FROM arrs
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_mk_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Significance-classified rolling MK (the detector gate, not just the
     statistic): tie-corrected variance, continuity-corrected z, two-sided
@@ -582,7 +584,7 @@ FROM zc WHERE abs(z) > {zcrit!r}
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_acf_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACFDetector seasonality presence + pruned cycle lengths
     (Bartlett CIs, greedy-equivalent divisor pruning) — full oracle."""
@@ -667,7 +669,7 @@ FROM sa
 # trend models (closed-form OLS)
 # --------------------------------------------------------------------------
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = trend.linear_forecast(hourly_series(spark, sf_dir), steps=24, freq_seconds=3600)
     return _fmt_time(_r6(out, "fcst", "fcst_lower", "fcst_upper"))
@@ -756,7 +758,7 @@ FROM co, (SELECT unnest(generate_series(1, 24))::DOUBLE AS h)
 # metrics
 # --------------------------------------------------------------------------
 
-@prepared()
+@prepared
 def q_metrics_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All closed-form error metrics of the naive lag-1 forecast, per series
     (kats/metrics/metrics.py registry as one agg)."""
@@ -995,7 +997,7 @@ FROM days
 # tsfeatures (expression group)
 # --------------------------------------------------------------------------
 
-@prepared()
+@prepared
 def q_ts_stat_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One feature row per series: basic stats + lumpiness + stability +
     crossing_points + binarize_mean + std1st_der + flat_spots +
@@ -1191,7 +1193,7 @@ WINDOW
 # decomposition
 # --------------------------------------------------------------------------
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_ma_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = decomposition.ma_decompose(hourly_series(spark, sf_dir), period=24)
     return _fmt_time(_r6(out, "value", "trend", "seasonal", "residual"))
@@ -1277,7 +1279,7 @@ FROM agg
 # sessionization (interval consolidation primitive)
 # --------------------------------------------------------------------------
 
-@prepared()
+@prepared
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization per user (30-min gap) — the interval
     consolidation primitive behind IntervalDetectorModel
@@ -1301,7 +1303,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@prepared()
+@prepared
 def q_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via Spark's NATIVE ``session_window`` — the same
     30-min-gap semantics as ``q_sessionize``'s lag/cumsum plan (verified:
@@ -2038,7 +2040,7 @@ HAVING count(*) >= 2
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_auto_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model selection INSIDE one plan (the Evaluator/backtester flow,
     kats/evaluation/evaluator.py + backtesters.py, as a single query):

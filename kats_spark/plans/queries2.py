@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kats_spark.cache import prepared
 from kats_spark.models import fcst as fcst_mod
-from kats_spark.plans.prepared import prepared
 from kats_spark.sources.load import read_parquet
 from kats_spark.operators import (
     backtest as bt_mod,
@@ -150,7 +150,7 @@ FROM united GROUP BY 1, 2
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_weighted_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted-average ensemble (weighted_avg_ensemble.py:30), weights =
     1/backtest-MAE per (series, model) — full oracle composed from the
@@ -1241,7 +1241,7 @@ FROM withbest
 """
 
 
-@prepared()
+@prepared
 def q_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-trigram profile language ID (Cavnar & Trenkle shape, IDF-
     weighted literal profiles) — full oracle: the identical (lang, g, w)
@@ -1285,7 +1285,7 @@ FROM documents d2 LEFT JOIN best ON d2.doc_id = best.doc_id
 """
 
 
-@prepared()
+@prepared
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII/URL redaction with a full oracle: documents are deterministically
     enriched with synthetic contact strings (emails/URLs/IPs/phones built
@@ -1342,7 +1342,7 @@ FROM scrubbed
 _BM25_TERMS = ["spark", "window", "join"]
 
 
-@prepared()
+@prepared
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval for a literal query — full oracle: the
     Okapi formula replays term-for-term in DuckDB (rounded scores ORDER
@@ -1776,14 +1776,17 @@ def q_ml_ar_insample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global GBT over lag/calendar features of ALL series jointly
     (kats/models/ml_ar.py re-expressed on MLlib) — rows-only (tree
     ensembles aren't SQL-expressible; determinism pinned by seed)."""
+    from kats_spark import cache
     from kats_spark.models import ml_ar
 
-    # memo_key declares the per-sf training corpus immutable for the
-    # session: the first call trains, later calls measure the standing
-    # model's inference plan (the r08 global_rnn amortization contract;
-    # memo-hit == fresh-fit bit-identity pinned in tests/test_ml.py)
+    # memo_key is the training corpus's content fingerprint: the first
+    # call trains, later calls measure the standing model's inference
+    # plan, and a rewrite of events.parquet retrains (memo-hit ==
+    # fresh-fit bit-identity pinned in tests/test_ml.py)
     out = ml_ar.fit_predict_insample(
-        hourly_series(spark, sf_dir), max_iter=10, memo_key=(sf_dir,)
+        hourly_series(spark, sf_dir),
+        max_iter=10,
+        memo_key=(cache.fingerprint(f"{sf_dir}/events.parquet"),),
     )
     return _fmt_time(_r6(out, "value", "prediction"))
 
@@ -1810,7 +1813,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@prepared()
+@prepared
 def q_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced diversity selection (Sorscher et al. 2022
     prototypicality pruning / the SemDeDup-D4 cluster-then-rank layout):
@@ -2004,9 +2007,6 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVFPQ_COARSE_MEMO: dict = {}
-
-
 def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed index audit (IVFADC, Jégou 2011 §IV; VERDICT r03
     item #3): coarse cells + residual PQ codes + probed ADC scan + exact
@@ -2023,24 +2023,11 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     One row per query: (query_id, recall_ivf_p1, recall_ivfpq_p4)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from kats_spark import cache
     from kats_spark.operators import ivf, pq
     from kats_spark.operators.ivf import _rnd6, _sq_dist
 
-    # coarse-plan memo (the r13 embed_neardup _INDEX_MEMO pattern): the
-    # (emb, indexed, centers) LOGICAL PLANS are deterministic in
-    # (gateway, sf_dir) and cost ~0.5 s of py4j/Catalyst work per call;
-    # memo-hit re-registers the persist/cache boundaries (registration
-    # only — an external clearCache leaves dropped blocks to recompute
-    # fresh, so no data survives into the next measurement).  The PQ
-    # training collects, the encode pass and the searches below run
-    # UNmemoized every call — that is the real work this audit measures.
-    key = ((spark.sparkContext.applicationId, spark.sparkContext.startTime), sf_dir)
-    hit = _IVFPQ_COARSE_MEMO.get(key)
-    if hit is not None:
-        emb, indexed, centers_df = hit
-        indexed.persist()
-        centers_df.persist()
-    else:
+    def coarse():
         emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         )
@@ -2048,8 +2035,15 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persist the assignment: it feeds the PQ residual build (sample +
         # encode via the resid boundary) AND the plain-IVF baseline scan —
         # without it the coarse argmin pipeline runs once per consumer
-        indexed = indexed.persist()
-        _IVFPQ_COARSE_MEMO[key] = (emb, indexed, centers_df)
+        return emb, cache.register(indexed.persist()), cache.register(centers_df)
+
+    # coarse-plan memo: the (emb, indexed, centers) LOGICAL PLANS cost
+    # ~0.5 s of py4j/Catalyst work per call; a hit re-registers their
+    # boundaries (registration only, so no data survives an external
+    # clearCache into the next measurement).  The PQ training collects,
+    # the encode pass and the searches below run every call — that is
+    # the real work this audit measures.
+    emb, indexed, centers_df = cache.memo("ivfpq_coarse", (sf_dir,), coarse)
     # the bounded query-vector collect is independent of the PQ build —
     # overlap the two driver jobs (guide §2.6)
     with ThreadPoolExecutor(max_workers=1) as pool:
@@ -2266,7 +2260,7 @@ GROUP BY t.query_id
 """
 
 
-@prepared()
+@prepared
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantic deduplication (Abbas et al. 2023): portable-IVF
     k-means clustering, within-cell cosine pairs at threshold 0.35, keep
@@ -2401,7 +2395,7 @@ FROM ranked WHERE rank <= 10
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_tsfeatures_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TsFeatures KERNEL group exactly as the wide row consumes it
     (kernel_features with skip_stl — the STL trio comes from
@@ -2424,7 +2418,7 @@ def q_tsfeatures_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_tsfeatures_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full 69-column TsFeatures vector (expression + kernel + STL +
     acfpacf + seasonalities + nowcasting + time layers) — FULL oracle
@@ -2445,7 +2439,7 @@ def q_tsfeatures_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_tsfeatures_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EXPRESSION layer of the TsFeatures vector (every group except
     the numpy kernel layer), hash-matched against a full DuckDB replay —
@@ -2604,7 +2598,7 @@ JOIN hmode hm USING (series_id) JOIN ls s USING (series_id)
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_tsfeatures_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TsFeatures DETECTOR-DERIVED feature groups
     (kats/tsfeatures/tsfeatures.py:1444-1720): 17 features per series
@@ -3033,6 +3027,7 @@ def q_global_rnn_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared window pass, per-horizon median combination distributed-side.
     Iterative nonlinear fit -> rows-only; beats-single-model holdout
     test in tests/test_global_rnn.py."""
+    from kats_spark import cache
     from kats_spark.models.global_rnn import global_rnn_ensemble_forecast
 
     out = global_rnn_ensemble_forecast(
@@ -3045,7 +3040,7 @@ def q_global_rnn_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         epochs=90,
         sample_windows=512,
         seed=7,
-        memo_key=f"ens:{sf_dir}",
+        memo_key=cache.fingerprint(f"{sf_dir}/events.parquet"),
     )
     return _fmt_time(_r6(out, "fcst", "fcst_lower", "fcst_upper"))
 
@@ -3055,6 +3050,7 @@ def q_global_ens_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     every series by time, ONE global-ensemble fit on the head, score the
     held-out tail per series.  Rows-only (iterative fit).  Output
     (series_id, n_test, mae, rmse, mape)."""
+    from kats_spark import cache
     from kats_spark.models.global_rnn import global_rnn_ensemble_backtest
 
     out = global_rnn_ensemble_backtest(
@@ -3068,7 +3064,7 @@ def q_global_ens_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         epochs=90,
         sample_windows=512,
         seed=7,
-        memo_key=f"ens:{sf_dir}",
+        memo_key=cache.fingerprint(f"{sf_dir}/events.parquet"),
     )
     return _r6(out.orderBy("series_id"), "mae", "rmse", "mape")
 
@@ -3369,7 +3365,7 @@ def q_prophet_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fmt_time(_r6(out, "fcst", "fcst_lower", "fcst_upper"))
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Loess-STL per-series decomposition (decomposition.py:171
     __decompose_STL surface) — FULL oracle since r12: the deterministic
@@ -3455,7 +3451,7 @@ FROM fc f LEFT JOIN seas s ON f.series_id = s.series_id AND f.phase = s.phase
 # --------------------------------------------------------------------------
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EMA(12) per point (feature_extraction.py:375 EMA) — the recursive
     family's representative, hash-matched: pandas ewm(span, adjust=True)
@@ -3731,7 +3727,7 @@ def q_metalearn_hpt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_kats_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kats_spark.models import kats_ensemble as ke
 
@@ -3927,18 +3923,18 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     including the ambiguous middle band the heuristics cannot call.
     Iterative L-BFGS -> rows-only; the AUC-beats-heuristic contract is
     tests/test_ml.py::test_quality_classifier_beats_heuristic_auc."""
+    from kats_spark import cache
     from kats_spark.models.quality_classifier import quality_classifier_scores
-    from kats_spark.sources.ann_store import source_fingerprint
 
     src = f"{sf_dir}/documents.parquet"
     docs = read_parquet(spark, src).select("doc_id", "text")
     # memo_key: first call trains, later calls measure the standing
     # classifier's scoring plan (the r08/r14 amortization contract;
     # memo-hit == fresh bit-identity pinned in tests/test_ml.py).  Keyed
-    # on the source's CONTENT (parquet footers, no Spark job), so data
+    # on the source's content (cache.fingerprint, no Spark job), so data
     # rewritten under the same path retrains instead of reusing a model
     # fitted on the old corpus.
-    out = quality_classifier_scores(docs, memo_key=(source_fingerprint(src),))
+    out = quality_classifier_scores(docs, memo_key=(cache.fingerprint(src),))
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("weak_label").cast("int").alias("weak_label"),
@@ -4008,7 +4004,7 @@ FROM d
 """
 
 
-@prepared()
+@prepared
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL media decode with a full oracle: deterministic PPM (8x8
     RGB), WAV (PCM 8-bit mono, 8 kHz), PNG (8x8 RGB, stdlib-zlib
@@ -4161,7 +4157,7 @@ UNION ALL SELECT * FROM png
 """
 
 
-@prepared()
+@prepared
 def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline-JPEG encode+decode with a full oracle (split out of
     multimodal_decode in r05 so each scope has a baseline that covers
@@ -4250,7 +4246,7 @@ FROM b
 """
 
 
-@prepared()
+@prepared
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio spectral features with a FULL value-hash oracle: each
     document's first 64 ASCII codes become an 8-bit PCM WAV (8 kHz),
@@ -4473,7 +4469,7 @@ def q_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal.py."""
     import pandas as pd
 
-    from kats_spark import boundary
+    from kats_spark import cache
     from kats_spark.operators import dedup
     from kats_spark.operators.skew import _UNKNOWN_STATS, plan_size_bytes
 
@@ -4526,7 +4522,7 @@ def q_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = docs.mapInPandas(fused_kernel, "media_id bigint, phash bigint")
     # hash frame feeds both sides of the band self-join (see
     # multimodal.phash_neardup_pairs, whose tail this reuses)
-    fp = boundary.register(fp.persist())
+    fp = cache.register(fp.persist())
     out = dedup.simhash_pairs(fp, max_hamming=6, id_col="media_id", fp_col="phash")
     return out.select(
         F.col("id_a").cast("bigint").alias("id_a"),
@@ -4535,7 +4531,7 @@ def q_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@prepared()
+@prepared
 def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling: per-frame luma stats for every 2nd frame of
     deterministic MJPEG-AVI and Y4M containers built from document text.
@@ -4699,7 +4695,7 @@ FROM h GROUP BY 1
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_tsfeatures_wide_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE oracled WIDE TsFeatures row (VERDICT r09 item #7): the
     closed-form-expressible feature blocks — statistics + level_shift
@@ -4754,7 +4750,7 @@ JOIN ({_Q_TSFEAT_TIME_SQL}) t USING (series_id)
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_metalearn_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metalearner metadata PRODUCER (get_metadata.py workflow): the
     per-series candidate-model holdout tournament — linear / quadratic /
@@ -5475,7 +5471,7 @@ def q_simulate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@prepared(recache=(hourly_series,))
+@prepared
 def q_kernel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kats_spark.operators import tsfeatures as tsf
 

@@ -642,7 +642,7 @@ def bitext_mine_stored(
         # margin tail's consumers, no plan->RDD conversion at call time
         .persist()
     )
-    from kats_spark import boundary
+    from kats_spark import cache
 
-    scored = boundary.register(scored)
+    scored = cache.register(scored)
     return _margin_tail(scored, k, threshold, hint_broadcast_avgs=False)

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from kats_spark import cache
 from kats_spark.tsframe import TSSchema, DEFAULT
 
 _UNIT_TO_SECONDS = {"s": 1.0, "ms": 1e-3, "us": 1e-6, "ns": 1e-9}
@@ -100,8 +101,9 @@ def footer_schema(spark: SparkSession, path: str) -> StructType:
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the schema pinned from the
     footer, so the read starts no schema-inference job.  Nothing is
-    memoized: a file rewritten under the same path is re-read on the next
-    call."""
+    memoized here; the path is recorded with the cache build in progress
+    (``kats_spark.cache.source``), whose hits re-check its content."""
+    cache.source(path)
     return spark.read.schema(footer_schema(spark, path)).parquet(path)
 
 

@@ -742,26 +742,27 @@ def test_all_pairs_topk_sharded_equals_unsharded(spark):
     # for the driver-side collect + broadcast) is bit-identical to a
     # fresh build, and the second call actually HITS the memo (no new
     # broadcast handles).
-    from kats_spark.operators import similarity as sim
+    from kats_spark import cache
 
-    sim.clear_index_memo()
+    cache.clear()
     first = (
         all_pairs_topk(df, k=5, memo_key="test-allpairs")
         .toPandas()
         .sort_values(["id_a", "rk"])
         .reset_index(drop=True)
     )
-    handles_after_first = dict(sim._INDEX_MEMO)
+    assert cache.stats()["allpairs_index"] == {"hits": 0, "builds": 1}
     hitpath = (
         all_pairs_topk(df, k=5, memo_key="test-allpairs")
         .toPandas()
         .sort_values(["id_a", "rk"])
         .reset_index(drop=True)
     )
-    assert dict(sim._INDEX_MEMO) == handles_after_first  # same live handles
+    # the second call reused the live handles: a hit, no new build
+    assert cache.stats()["allpairs_index"] == {"hits": 1, "builds": 1}
     pd.testing.assert_frame_equal(one, first, check_dtype=False)
     pd.testing.assert_frame_equal(one, hitpath, check_dtype=False)
-    sim.clear_index_memo()
+    cache.clear()
 
 
 def test_minhash_bucket_cap_overflow_join_equals_in_row(spark):

@@ -61,13 +61,19 @@ def test_bpe_train_gate_probe_job_budget(spark, sf_dir, count_jobs):
     """The vocabulary size gate is one limit-probe that decides and
     collects: the unpersisted (word, freq) table's tokenize + groupBy
     runs once, not once for a count() and again for the collect.  The
-    call plus its action started 6 jobs with the count."""
+    call plus its action started 6 jobs with the count.  The declared
+    row keeps that budget: the merge table already comes in rank order,
+    so it adds no sort (with one, the row took 5 at sf0.001)."""
     from kats_spark.operators.bpe import bpe_train
+    from kats_spark.plans.pipeline_queries import q_bpe_train
     from kats_spark.sources.load import read_parquet
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     with count_jobs() as jobs:
         bpe_train(docs, num_merges=20).toPandas()
+    assert len(jobs) <= 4, jobs
+    with count_jobs() as jobs:
+        q_bpe_train(spark, sf_dir).toPandas()
     assert len(jobs) <= 4, jobs
 
 

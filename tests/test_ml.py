@@ -4,6 +4,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from kats_spark import cache
 from kats_spark.models import ml_ar
 from kats_spark.operators import ivf, simulator, tsfeatures
 from kats_spark.operators.similarity import topk_vs_query
@@ -601,18 +602,20 @@ def test_ml_ar_model_memo_hit_equals_fresh(spark):
         spark, n_series=2, n_points=200, noise_std=0.5,
         seasonal_period=24, seasonal_magnitude=2.0, seed=83,
     )
-    ml_ar._MODEL_MEMO.clear()
+    cache.clear()
     fresh = sorted(map(tuple, ml_ar.fit_predict_insample(
         df, max_iter=5, memo_key=("t",)).collect()))
-    assert ml_ar._MODEL_MEMO  # first call trained and stored
+    assert cache.stats()["ml_ar_model"] == {"hits": 0, "builds": 1}
     hit = sorted(map(tuple, ml_ar.fit_predict_insample(
         df, max_iter=5, memo_key=("t",)).collect()))
+    assert cache.stats()["ml_ar_model"] == {"hits": 1, "builds": 1}
     assert hit == fresh
     # different memo_key -> independent fit, same values (determinism)
     other = sorted(map(tuple, ml_ar.fit_predict_insample(
         df, max_iter=5, memo_key=("u",)).collect()))
+    assert cache.stats()["ml_ar_model"] == {"hits": 1, "builds": 2}
     assert other == fresh
-    ml_ar._MODEL_MEMO.clear()
+    cache.clear()
 
 
 def test_quality_classifier_memo_hit_equals_fresh(spark):
@@ -632,14 +635,15 @@ def test_quality_classifier_memo_hit_equals_fresh(spark):
             F.lit(" common filler words appear here often enough"),
         ).alias("text"),
     )
-    qc._MODEL_MEMO.clear()
+    cache.clear()
     fresh = sorted(map(tuple, qc.quality_classifier_scores(
         df, max_iter=5, memo_key=("t",)).collect()))
-    assert qc._MODEL_MEMO  # trained and stored
+    assert cache.stats()["quality_classifier_model"] == {"hits": 0, "builds": 1}
     hit = sorted(map(tuple, qc.quality_classifier_scores(
         df, max_iter=5, memo_key=("t",)).collect()))
+    assert cache.stats()["quality_classifier_model"] == {"hits": 1, "builds": 1}
     assert hit == fresh
-    qc._MODEL_MEMO.clear()
+    cache.clear()
 
 
 def test_quality_classifier_memo_hit_plan_is_join_free(spark):
@@ -651,14 +655,15 @@ def test_quality_classifier_memo_hit_plan_is_join_free(spark):
     df = spark.createDataFrame(
         _mixed_quality_corpus(n_good=30, n_bad=30)[["doc_id", "text"]]
     )
-    qc._MODEL_MEMO.clear()
+    cache.clear()
     qc.quality_classifier_scores(df, max_iter=5, memo_key=("plan",))
     hit = qc.quality_classifier_scores(df, max_iter=5, memo_key=("plan",))
+    assert cache.stats()["quality_classifier_model"]["hits"] == 1
     hit.collect()
     plan = hit._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan
     assert "BroadcastExchange" not in plan, plan
-    qc._MODEL_MEMO.clear()
+    cache.clear()
 
 
 def test_quality_classifier_query_retrains_on_rewritten_source(spark, tmp_path):
@@ -679,14 +684,15 @@ def test_quality_classifier_query_retrains_on_rewritten_source(spark, tmp_path):
 
     old = _mixed_quality_corpus(n_good=40, n_bad=40, seed=11)
     new = _mixed_quality_corpus(n_good=40, n_bad=40, seed=12)
-    qc._MODEL_MEMO.clear()
+    cache.clear()
     write(old)
     first = rows()
     assert rows() == first  # memo hit on unchanged content
     write(new)
     rewritten = rows()
-    qc._MODEL_MEMO.clear()
+    assert cache.stats()["quality_classifier_model"] == {"hits": 1, "builds": 2}
+    cache.clear()
     fresh = rows()  # a cold fit on the new corpus
     assert rewritten == fresh
     assert rewritten != first
-    qc._MODEL_MEMO.clear()
+    cache.clear()

@@ -37,7 +37,7 @@ _PREPARED = sorted(
 
 @pytest.mark.parametrize("name", _PREPARED)
 def test_prepared_memo_hit_equals_fresh(spark, sf_dir, name):
-    """Prepared-statement queries (plans/prepared.py): after an external
+    """Prepared-statement queries (kats_spark/cache.py): after an external
     clearCache (the bench harness does this between reps), the memoized
     plan must produce the same rows as a freshly-constructed one — the
     memo may only skip CONSTRUCTION, never computation."""

@@ -167,6 +167,26 @@ def test_parquet_reads_go_through_the_loader():
     assert not offenders, offenders
 
 
+def test_memos_go_through_the_session_cache():
+    """Every memo lives in ``kats_spark/cache.py``: no other module keeps
+    a module-level ``*_MEMO`` dict or builds its own (applicationId,
+    startTime) context key.  (The pure byte-keyed LUT caches in
+    ``operators/jpeg.py`` are not memos of Spark state.)"""
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "kats_spark"
+    memo_dict = re.compile(r"^(\w*_MEMO)\s*(:[^=\n]*)?=", re.M)
+    ctx_key = re.compile(r"applicationId\W[^;]{0,80}?startTime")
+    offenders = [
+        f"{p.relative_to(pkg)}: {m.group(0)[:60]!r}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "cache.py"
+        for pat in (memo_dict, ctx_key)
+        for m in pat.finditer(p.read_text())
+    ]
+    assert not offenders, offenders
+
+
 def test_no_row_at_a_time_python_udfs(plans):
     """BatchEvalPython = per-row Python round-trips (the 10-100x slow
     path).  Every Python kernel in this repo must be Arrow-batched."""

@@ -289,10 +289,8 @@ def run_op(name: str, spark, k: int) -> tuple[float, int]:
         import shutil
         import tempfile
 
-        from kats_spark.plans.pipeline_queries import (
-            q_corpus_build,
-            release_corpus_cache,
-        )
+        from kats_spark import cache
+        from kats_spark.plans.pipeline_queries import q_corpus_build
 
         tmp = tempfile.mkdtemp(prefix=f"corpusbuild_{k}x_")
         try:
@@ -302,7 +300,7 @@ def run_op(name: str, spark, k: int) -> tuple[float, int]:
             t0 = time.time()  # restart: measure the pipeline, not the copy
             n = q_corpus_build(spark, tmp).count()
         finally:
-            release_corpus_cache()
+            cache.clear()
             shutil.rmtree(tmp, ignore_errors=True)
     elif name == "metalearn":
         # per-series candidate tournament + the TsFeatures expression
