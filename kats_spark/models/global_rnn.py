@@ -155,6 +155,7 @@ def global_rnn_forecast(
     sample_windows: int = 2048,
     seed: int = 0,
     s: TSSchema = DEFAULT,
+    memo_key: str | None = None,
 ) -> DataFrame:
     """(series_id, time, fcst, fcst_lower, fcst_upper): one GRU fit on a
     bounded global window sample, applied per series.
@@ -165,22 +166,35 @@ def global_rnn_forecast(
     collect — the ONLY driver-side data, capped regardless of corpus
     size; (2) numpy GRU training on the normalized sample; (3) weights
     travel in the UDF closure (Spark broadcasts the serialized task) and
-    every series forecasts from its tail window distributed-side."""
+    every series forecasts from its tail window distributed-side.
+
+    ``memo_key``: as in :func:`global_rnn_ensemble_forecast` — a source
+    fingerprint that lets a repeat call reuse the trained weights."""
+    from kats_spark import cache
+
     win = window
     wsize = win + steps
-    wins = _window_frame(df, win, wsize, s).orderBy("k").limit(sample_windows)
-    sample = np.array([list(r.w) for r in wins.collect()], dtype=float)
-    if len(sample) == 0:
-        raise ValueError(f"no series long enough for window+steps={wsize}")
-    Wn, _ = _normalize_windows(sample, win)
-    model = GRULite(hidden=hidden, horizon=steps, seed=seed)
-    model.fit(Wn[:, :win], Wn[:, win:], epochs=epochs)
-    # residual spread on the ORIGINAL scale for interval bands
-    yhat_n, _ = model._forward(Wn[:, :win])
-    scale = np.abs(sample[:, :win]).mean(axis=1, keepdims=True) + 1e-9
-    resid = (yhat_n - Wn[:, win:]) * scale
-    se_h = resid.std(axis=0, ddof=1)  # per-horizon spread
-    params = {k: v.copy() for k, v in model.params.items()}
+
+    def train():
+        wins = _window_frame(df, win, wsize, s).orderBy("k").limit(sample_windows)
+        sample = np.array([list(r.w) for r in wins.collect()], dtype=float)
+        if len(sample) == 0:
+            raise ValueError(f"no series long enough for window+steps={wsize}")
+        Wn, _ = _normalize_windows(sample, win)
+        model = GRULite(hidden=hidden, horizon=steps, seed=seed)
+        model.fit(Wn[:, :win], Wn[:, win:], epochs=epochs)
+        # residual spread on the ORIGINAL scale for interval bands
+        yhat_n, _ = model._forward(Wn[:, :win])
+        scale = np.abs(sample[:, :win]).mean(axis=1, keepdims=True) + 1e-9
+        resid = (yhat_n - Wn[:, win:]) * scale
+        se = resid.std(axis=0, ddof=1)  # per-horizon spread
+        return {k: v.copy() for k, v in model.params.items()}, se
+
+    if memo_key is None:
+        params, se_h = train()
+    else:
+        key = (memo_key, steps, window, hidden, epochs, sample_windows, seed)
+        params, se_h = cache.memo("global_rnn_single_weights", key, train)
     hid, hor = hidden, steps
 
     schema = (

@@ -344,49 +344,55 @@ def jaccard_allpairs(
     )
 
 
-def _signsum_simhash_agg(bits: int, hash_col: str = "__h") -> Column:
-    """ONE parsed aggregate expression for the whole sign-sum SimHash
-    collapse: per-bit ``sum(±1)`` partial aggregates folded into the
-    final bigint fingerprint.  The Column-operator form (``bits`` agg
-    Columns + a ``bits``-step shiftleft fold) costs ~6 py4j round trips
-    per bit — ~1 s of pure driver construction at bits=24, ~2.5 s at 64
-    — while a single F.expr parse builds the identical expression tree
-    (same CASE/sum/shiftleft ops, same left-associative add order, exact
-    integer math)."""
-    terms = " + ".join(
-        f"shiftleft(CASE WHEN sum(CASE WHEN (shiftright({hash_col}, {b}) & 1) = 1 "
-        f"THEN 1 ELSE -1 END) > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) "
-        f"END, {b})"
+# Two 32-bit counting lanes per bigint; no array holds 2^31 elements, so
+# a lane count never carries into its neighbour.
+_LANES = (1 << 32) | 1
+
+
+def _simhash_rows(
+    df: DataFrame, text_col: str, token_hash: str, bits: int, out_col: str, keep: list[str]
+) -> DataFrame:
+    """Row-local sign-sum SimHash: ``keep`` plus the ``bits``-wide
+    fingerprint ``out_col`` of every row whose text has a token.
+    ``token_hash`` is SQL over the token ``g`` giving its hash with bit
+    ``b`` at bit ``b % half`` of lane ``b // half`` (``half`` =
+    ceil(bits/2)).  The hashes are staged once per document; each of the
+    ``half`` folds over them counts two bits, and bit ``b`` is set when
+    more than half of the tokens set it (the sign of the per-bit ±1 sum).
+    No explode, aggregate, join or exchange.
+
+    Token-less rows (NULL, empty, whitespace) are dropped on the raw
+    text: a filter on the staged array would be pushed below the staging
+    and tokenize every document twice."""
+    half = (bits + 1) // 2
+    cols = [f"`{c}`" for c in keep]
+    counts = (
+        df.filter(F.col(text_col).rlike(r"\S"))
+        .select(*keep, tokens(normalize(F.col(text_col))).alias("__t"))
+        .selectExpr(*cols, f"transform(__t, g -> {token_hash}) AS __y")
+        .selectExpr(*cols, "size(__y) AS __n", *(
+            f"aggregate(__y, 0L, (a, y) -> a + ((y >> {s}) & {_LANES})) AS __c{s}"
+            for s in range(half)
+        ))
+    )
+    fp = " + ".join(
+        f"shiftleft(CAST(2 * (__c{b % half} {'>> 32' if b >= half else '& 4294967295'}) "
+        f"> __n AS BIGINT), {b})"
         for b in range(bits)
     )
-    return F.expr(f"CAST(0 AS BIGINT) + {terms}")
+    # never NULL, but the hash's ``%`` makes Catalyst think so; without the
+    # coalesce a join on the fingerprint infers isnotnull(fp) and pushes it
+    # below the staging, recomputing every fold
+    return counts.selectExpr(*cols, f"coalesce(CAST(0 AS BIGINT) + {fp}, 0L) AS `{out_col}`")
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            out_col: str = "simhash", fan_out: bool = True) -> DataFrame:
-    """64-bit SimHash: per-token 64-bit hash, sign-sum each bit, collapse to
-    a bigint.
-
-    Token hashes are exploded once and the 64 bit sign-sums are partial
-    aggregates (sum of ±1 per bit) — tokenization runs once per doc, the
-    shuffle carries one 64-counter row per doc (see minhash_signatures for
-    why 64 lambda expressions would re-tokenize 64×)."""
-    from kats_spark.operators.skew import spread
-
-    hashed = F.transform(tokens(normalize(F.col(text_col))), lambda x: F.xxhash64(x))
-    # spread before tokenize+explode (see shingle_rows): the id-hash
-    # exchange is reused by the per-doc groupBy, so stage-1 tokenization
-    # parallelizes at no extra shuffle.
-    narrow = df.select(F.col(id_col), F.col(text_col))
-    if fan_out:
-        narrow = spread(narrow, id_col)
-    exploded = narrow.select(
-        F.col(id_col), F.explode(hashed).alias("__h")
-    )
-    sh = exploded.groupBy(id_col).agg(
-        _signsum_simhash_agg(64, "__h").alias(out_col)
-    )
-    return df.join(sh, id_col)
+            out_col: str = "simhash") -> DataFrame:
+    """64-bit SimHash: per-token xxhash64, sign-sum each bit, collapse to
+    a bigint — ``df``'s columns plus ``out_col`` for the rows that have
+    a token (:func:`_simhash_rows`, 32 folds).  Row-local, so ``id_col``
+    is unused."""
+    return _simhash_rows(df, text_col, "xxhash64(g)", 64, out_col, df.columns)
 
 
 # --------------------------------------------------------------------------
@@ -397,15 +403,20 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 # hashing, 64-bit space); these prove algorithm correctness end-to-end.
 # --------------------------------------------------------------------------
 
-def poly_hash_expr(col_name: str) -> Column:
-    """31-base polynomial rolling hash of a string column, mod 2^31-1 —
-    h_0 = 0, h_i = (31 h_{i-1} + code(c_i)) mod p.  Identical in DuckDB as
+def _poly_hash_sql(x: str, finish: str = "h -> h") -> str:
+    """31-base polynomial rolling hash of the string ``x``, mod 2^31-1 —
+    h_0 = 0, h_i = (31 h_{i-1} + code(c_i)) mod p, then ``finish`` —
+    one fold over the character positions.  Identical in DuckDB as
     list_reduce(list_prepend(0, codes), (h,c) -> (h*31+c) % p)."""
-    return F.expr(
-        f"aggregate(transform(sequence(1, length({col_name})), "
-        f"i -> bigint(ascii(substr({col_name}, i, 1)))), 0L, "
-        f"(h, c) -> (h * 31 + c) % {_P})"
+    return (
+        f"aggregate(sequence(1, length({x})), 0L, "
+        f"(h, i) -> (h * 31 + ascii(substr({x}, i, 1))) % {_P}, {finish})"
     )
+
+
+def poly_hash_expr(col_name: str) -> Column:
+    """:func:`_poly_hash_sql` of a string column."""
+    return F.expr(_poly_hash_sql(col_name))
 
 
 def simhash_portable(
@@ -414,27 +425,15 @@ def simhash_portable(
     id_col: str = "doc_id",
     bits: int = 16,
     out_col: str = "simhash16",
-    fan_out: bool = True,
 ) -> DataFrame:
-    """SimHash over the portable polynomial hash (bits ≤ 31).  Same
-    explode → partial-agg shape as ``simhash``; sign-sums count token
-    MULTIPLICITY (classic frequency-weighted SimHash).
-    ``fan_out=False`` for small arriving batches (see ``_tok_rows``)."""
-    from kats_spark.operators.skew import spread
-
-    # spread before tokenize+explode (see shingle_rows): the char-at-a-time
-    # polynomial hash is the hottest per-row work in the portable family
-    # and would otherwise run on the scan's (often single) input split.
-    narrow = df.select(F.col(id_col), F.col(text_col))
-    if fan_out:
-        narrow = spread(narrow, id_col)
-    tok = narrow.select(
-        F.col(id_col), F.explode(tokens(normalize(F.col(text_col)))).alias("__t")
-    )
-    hashed = tok.select(F.col(id_col), poly_hash_expr("__t").alias("__h"))
-    return hashed.groupBy(id_col).agg(
-        _signsum_simhash_agg(bits, "__h").alias(out_col)
-    )
+    """SimHash over the portable polynomial hash (bits ≤ 31): the
+    ``(id, fingerprint)`` rows of :func:`_simhash_rows`.  Sign-sums count
+    token MULTIPLICITY (classic frequency-weighted SimHash).  No
+    aggregate, so the same plan runs inside a streaming micro-batch."""
+    half = (bits + 1) // 2
+    m = (1 << half) - 1
+    lanes = f"h -> (h & {m}) | (((h >> {half}) & {m}) << 32)"
+    return _simhash_rows(df, text_col, _poly_hash_sql("g", lanes), bits, out_col, [id_col])
 
 
 def shingle_string_rows(
@@ -692,14 +691,14 @@ def simhash_pairs(
     bounded-fan-out pattern as the MinHash band join; chunk values are
     hash-distributed so no hot key."""
     nb = _check_simhash_bands(bands, max_hamming, bits)
-    # no persist on the chunk rows, although BOTH sides of the band
-    # self-join derive from them: the two sides' shuffles are the same
-    # exchange of the same subtree, and AQE reuses it — the executed
-    # simhash_neardup plan holds one documents FileScan, one
-    # ReusedExchange and no InMemoryTableScan (asserted in tests), so
-    # the scan, tokenize and per-token hashing run once per action
-    # (only the post-shuffle sign-sum merge repeats per side).  A
-    # persist here only added two cache-fill jobs per call.
+    # BOTH sides of the band self-join derive from the fingerprint rows.
+    # Hashing the narrow (id, fp) rows on the id gives them one exchange
+    # that both sides read (AQE reuses it, whichever join the planner
+    # picks), so the scan, tokenize and fingerprint run once per action:
+    # the executed simhash_neardup plan holds one documents FileScan and
+    # a ReusedExchange (asserted in tests).  Without it a broadcast side
+    # re-scans the input.
+    fp_df = fp_df.select(id_col, fp_col).repartition(id_col)
     keyed = simhash_chunk_rows(fp_df, nb, bits, id_col, fp_col)
     l = keyed.select(
         "__band", "__chunk", F.col(id_col).alias("id_a"), F.col(fp_col).alias("__fa")
@@ -997,14 +996,13 @@ def incremental_simhash_pairs(
 
     Output: ``(new_id, corpus_id, hamming)`` distinct verified pairs."""
     _check_simhash_bands(bands, max_hamming, bits)
-    # fan_out=False on the BATCH side only (see incremental_neardup_pairs)
     if portable:
         fp_col = "simhash16"
-        fn = simhash_portable(new_df, text_col, id_col, bits, fp_col, fan_out=False)
+        fn = simhash_portable(new_df, text_col, id_col, bits, fp_col)
         fc = simhash_portable(corpus_df, text_col, id_col, bits, fp_col)
     else:
         fp_col = "simhash"
-        fn = simhash(new_df, text_col, id_col, fp_col, fan_out=False).select(
+        fn = simhash(new_df, text_col, id_col, fp_col).select(
             id_col, fp_col
         )
         fc = simhash(corpus_df, text_col, id_col, fp_col).select(id_col, fp_col)

@@ -472,16 +472,21 @@ def mixture_fit(
         # the second's tasks back-fill the first's stragglers (guide §2.6
         # overlap-independent-jobs); collect order doesn't touch values
         # (each result is a deterministic aggregate)
+        # (inheritable_thread_target: the jobs join the caller's job group)
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_src = pool.submit(
-                lambda: fr.groupBy("__s", "__b")
-                .agg(F.count("*").alias("__c"))
-                .collect()
+                inheritable_thread_target(fr.sparkSession)(
+                    lambda: fr.groupBy("__s", "__b").agg(F.count("*").alias("__c")).collect()
+                )
             )
             f_tgt = pool.submit(
-                lambda: ft.groupBy("__b").agg(F.count("*").alias("__c")).collect()
+                inheritable_thread_target(ft.sparkSession)(
+                    lambda: ft.groupBy("__b").agg(F.count("*").alias("__c")).collect()
+                )
             )
             per_src = f_src.result()
             per_tgt = f_tgt.result()

@@ -542,30 +542,6 @@ def char_ngram_profiles() -> dict[str, list[tuple[str, float]]]:
     return out
 
 
-def _doc_trigrams(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, g) rows: normalized char trigrams of each document, plus a
-    per-doc total for the score divisor."""
-    cleaned = F.concat(
-        F.lit(" "),
-        F.trim(
-            F.regexp_replace(F.lower(F.col(text_col)), r"[^\p{L}]+", " ")
-        ),
-        F.lit(" "),
-    )
-    d = df.select(F.col(id_col), cleaned.alias("__s"))
-    n = F.greatest(F.length("__s") - 2, F.lit(1))
-    return d.select(
-        id_col,
-        n.alias("__nt"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), n),
-                lambda i: F.col("__s").substr(i, F.lit(3)),
-            )
-        ).alias("g"),
-    )
-
-
 def lang_id_ngram(
     df: DataFrame,
     text_col: str = "text",
@@ -577,42 +553,78 @@ def lang_id_ngram(
     stopword variant's convention).  Returns
     (id, lang_pred_ng, lang_score_ng).
 
-    Plan: one trigram explode -> broadcast join against the literal
-    profile table (20 languages x top-128 trigrams = 2,560 rows) ->
-    groupBy(doc, lang) partial-agg -> per-doc argmax via max_by.  The
-    profile side is constant-size; the document side shuffles once on
-    the doc key — the unigram_logppl shape, Zipf-safe because trigram
-    profiles cap multiplicity at the language count."""
-    spark = df.sparkSession
-    prof_rows = [
-        (lang, g, w) for lang, gw in sorted(char_ngram_profiles().items())
-        for g, w in gw
-    ]
-    prof = spark.createDataFrame(prof_rows, "lang string, g string, w double")
-    tg = _doc_trigrams(df, text_col, id_col)
-    scores = (
-        tg.join(F.broadcast(prof), "g")
-        .groupBy(id_col, "lang")
-        # round BEFORE the argmax: partial-agg summation order differs
-        # between engines, and a 1e-17 wobble must not flip a tie
-        .agg(F.round(F.sum("w") / F.first("__nt"), 9).alias("score"))
+    Plan: row-local.  One native regex pass yields a document's trigrams
+    (a ``substr`` per position is quadratic: it walks the UTF-8 string
+    from its start); each looks up its (language, weight) entries in
+    :func:`_profile_lookup`'s literal map, and one fold per language sums
+    them.  Scores round to 9 decimals BEFORE the argmax, so a change in
+    summation order cannot flip a tie.  No explode, join or exchange."""
+    langs = sorted(char_ngram_profiles())
+    # a language scores only when one of its trigrams occurs (weights are
+    # positive); array_max skips the NULLs of the others
+    best = ", ".join(
+        f"IF(__s{i} > 0, named_struct('score', round(__s{i} / __nt, 9), 'lang', '{lang}'), NULL)"
+        for i, lang in enumerate(langs)
     )
-    best = scores.groupBy(id_col).agg(
-        F.max(F.struct(F.col("score"), F.col("lang"))).alias("b")
-    )
-    out = best.select(
-        id_col,
-        F.when(F.col("b.score") >= threshold, F.col("b.lang"))
-        .otherwise(F.lit("unknown"))
-        .alias("lang_pred_ng"),
-        F.round(F.col("b.score") + F.lit(1e-9), 6).alias("lang_score_ng"),
-    )
-    # docs with NO profile trigram at all (empty/garbage) -> unknown, 0
-    ids = df.select(F.col(id_col))
     return (
-        ids.join(out, id_col, "left")
-        .fillna({"lang_pred_ng": "unknown", "lang_score_ng": 0.0})
+        df.selectExpr(
+            f"`{id_col}`",
+            # the cleaned text of _char_trigrams: lower-cased, every run of
+            # non-letters one space, space-padded
+            f"concat(' ', trim(regexp_replace(lower(`{text_col}`), '[^\\\\p{{L}}]+', ' ')), ' ') AS __c",
+        )
+        .selectExpr(
+            f"`{id_col}`",
+            "greatest(length(__c) - 2, 1) AS __nt",
+            # the trigram at every position (\P{Cs}: none starts inside a
+            # surrogate pair); a 2-char text ("  ") has none, and the
+            # 2-char gram a position walk would give it is in no profile
+            "regexp_extract_all(__c, '(?=(\\\\P{Cs}..))', 1) AS __g",
+        )
+        .selectExpr(
+            f"`{id_col}`",
+            "__nt",
+            f"flatten(transform(__g, g -> coalesce({_profile_lookup('g')}, array()))) AS __e",
+        )
+        .selectExpr(f"`{id_col}`", "__nt", *(
+            f"aggregate(__e, 0D, (a, e) -> a + IF(e.l = {i}, e.w, 0D)) AS __s{i}"
+            for i in range(len(langs))
+        ))
+        .selectExpr(f"`{id_col}`", f"array_max(array({best})) AS __b")
+        .selectExpr(
+            f"`{id_col}`",
+            f"CASE WHEN __b.score >= {float(threshold)!r}D THEN __b.lang ELSE 'unknown' END"
+            " AS lang_pred_ng",
+            "coalesce(round(__b.score + 1e-9D, 6), 0D) AS lang_score_ng",
+        )
     )
+
+
+_PROFILE_BUCKETS = 1024
+
+
+def _profile_lookup(g: str) -> str:
+    """SQL giving the ``array<struct<l int, w double>>`` profile entries of
+    the trigram ``g`` (NULL when no profile holds it).  A Spark map lookup
+    is a linear scan, so the 2,354 trigrams sit in ``_PROFILE_BUCKETS``
+    maps keyed by ``crc32`` (the CRC-32 of the UTF-8 bytes, as Python's
+    ``zlib.crc32``).  The profile is one JSON string literal, parsed once
+    when Catalyst folds constants; the same maps as a SQL literal cost
+    ~1 s of driver parsing per call."""
+    import json
+    import zlib
+
+    buckets: list[dict] = [{} for _ in range(_PROFILE_BUCKETS)]
+    for i, (_, profile) in enumerate(sorted(char_ngram_profiles().items())):
+        for tg, w in profile:  # letters and spaces: no JSON escape needed
+            b = buckets[zlib.crc32(tg.encode("utf-8")) % _PROFILE_BUCKETS]
+            b.setdefault(tg, []).append({"l": i, "w": w})
+    profile = (
+        f"from_json('{json.dumps(buckets, ensure_ascii=False)}', "
+        "'array<map<string, array<struct<l: int, w: double>>>>')"
+    )
+    bucket = f"element_at({profile}, CAST(crc32({g}) % {_PROFILE_BUCKETS} AS INT) + 1)"
+    return f"element_at({bucket}, {g})"
 
 
 def lang_ngram_profile_sql() -> str:
@@ -1055,47 +1067,34 @@ def hash_embed(
     (and the deterministic stand-in for one in tests).
 
     Hash = the portable 31-base polynomial (dedup.poly_hash_expr), so
-    the full vector replays in DuckDB.  Plan: one token explode, one
-    (id, dim-slot) grouped count, one array_agg pivot back — linear,
-    map-side combined, no Python.
+    the full vector replays in DuckDB.  Plan: row-local.  Each token
+    becomes the code ``2 * slot + sign bit`` in one staged array per
+    document, and one fold per slot sums its signs; the norm and the
+    rounding fold the ``dim``-long vector.  No explode, no exchange.
+    Documents with no token are dropped (see ``dedup._simhash_rows``).
 
     Output: (id, embedding array<double> of length ``dim``,
     n_tokens)."""
-    from kats_spark.operators.dedup import poly_hash_expr
+    from kats_spark.operators.dedup import _poly_hash_sql
 
-    tok = df.select(
-        F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("__t")
+    code = _poly_hash_sql("g", f"h -> (h % {dim}) * 2 + ((h >> 8) & 1)")
+    docs = df.filter(F.col(text_col).rlike(r"\S"))
+    slots = ", ".join(
+        f"CAST(aggregate(__k, 0, (a, k) -> a + IF(k = {2 * j + 1}, 1, IF(k = {2 * j}, -1, 0))) AS DOUBLE)"
+        for j in range(dim)
     )
-    h = poly_hash_expr("__t")
-    slot = (h % dim).cast("int")
-    sign = F.when((h.bitwiseAND(F.lit(256))) > 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-    acc = (
-        tok.select(F.col(id_col), slot.alias("__slot"), sign.alias("__sgn"))
-        .groupBy(id_col, "__slot")
-        .agg(F.sum("__sgn").alias("__w"), F.count("*").alias("__c"))
-    )
-    per_doc = acc.groupBy(id_col).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("__slot", "__w"))
-        ).alias("__m"),
-        F.sum("__c").cast("bigint").alias("n_tokens"),
-    )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.coalesce(F.element_at("__m", i.cast("int")), F.lit(0.0)),
-    )
-    norm = F.sqrt(
-        F.aggregate(dense, F.lit(0.0), lambda a, x: a + x * x)
-    )
-    return per_doc.select(
-        id_col,
-        F.transform(
-            dense,
-            lambda x: F.round(
-                x / F.greatest(norm, F.lit(1e-12)) + F.lit(1e-9), 6
-            ),
-        ).alias("embedding"),
-        "n_tokens",
+    # the norm enters the rounding lambda through zip_with's second array,
+    # so it is evaluated once per document, not once per slot
+    return (
+        docs.select(F.col(id_col).alias("__id"), tokens(F.lower(F.col(text_col))).alias("__t"))
+        .selectExpr("__id", f"transform(__t, g -> {code}) AS __k")
+        .selectExpr("__id", f"array({slots}) AS __v", "CAST(size(__k) AS BIGINT) AS n_tokens")
+        .selectExpr(
+            f"__id AS `{id_col}`",
+            f"zip_with(__v, array_repeat(sqrt(aggregate(__v, 0D, (a, x) -> a + x * x)), {dim}), "
+            "(x, nm) -> round(x / greatest(nm, 1e-12D) + 1e-9D, 6)) AS embedding",
+            "n_tokens",
+        )
     )
 
 

@@ -2915,10 +2915,13 @@ def q_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     out = hash_embed(docs, dim=64)
+    # _outer: a plain posexplode of a column makes Catalyst infer
+    # size(embedding) > 0 and push it below the row-local kernel, which
+    # then runs twice; embeddings are never empty, so the rows are equal
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_tokens",
-        F.posexplode("embedding").alias("dim_ix", "val"),
+        F.posexplode_outer("embedding").alias("dim_ix", "val"),
     ).select(
         "doc_id", "n_tokens",
         F.col("dim_ix").cast("int").alias("dim_ix"), "val"

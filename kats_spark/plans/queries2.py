@@ -2023,6 +2023,8 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     One row per query: (query_id, recall_ivf_p1, recall_ivfpq_p4)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from kats_spark import cache
     from kats_spark.operators import ivf, pq
     from kats_spark.operators.ivf import _rnd6, _sq_dist
@@ -2045,13 +2047,16 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the real work this audit measures.
     emb, indexed, centers_df = cache.memo("ivfpq_coarse", (sf_dir,), coarse)
     # the bounded query-vector collect is independent of the PQ build —
-    # overlap the two driver jobs (guide §2.6)
+    # overlap the two driver jobs (guide §2.6); inheritable_thread_target
+    # keeps the worker's job in the caller's job group
     with ThreadPoolExecutor(max_workers=1) as pool:
         f_q = pool.submit(
-            lambda: [
-                (int(r.vec_id), list(r.embedding))
-                for r in emb.filter(F.col("vec_id") < 5).collect()
-            ]
+            inheritable_thread_target(spark)(
+                lambda: [
+                    (int(r.vec_id), list(r.embedding))
+                    for r in emb.filter(F.col("vec_id") < 5).collect()
+                ]
+            )
         )
         enc, centers, cb = pq.ivfpq_build(
             emb, id_col="vec_id", n_cells=8, m=16, ks=32, coarse=(indexed, centers_df)
@@ -2981,6 +2986,7 @@ def q_global_rnn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL series, broadcast weights, per-series distributed inference.
     Iterative nonlinear fit -> rows-only (no SQL oracle); gradient and
     beats-linear-global tests in tests/test_global_rnn.py."""
+    from kats_spark import cache
     from kats_spark.models.global_rnn import global_rnn_forecast
 
     out = global_rnn_forecast(
@@ -2992,6 +2998,7 @@ def q_global_rnn(spark: SparkSession, sf_dir: str) -> DataFrame:
         epochs=90,
         sample_windows=768,
         seed=7,
+        memo_key=cache.fingerprint(f"{sf_dir}/events.parquet"),
     )
     return _fmt_time(_r6(out, "fcst", "fcst_lower", "fcst_upper"))
 

@@ -352,9 +352,7 @@ def incremental_simhash_stored(
     )
 
     _check_simhash_bands(bands, max_hamming, bits)
-    # fan_out=False: the arriving batch is small (see dedup.
-    # incremental_neardup_pairs) — spreading it is pure overhead
-    fp = simhash_portable(new_df, text_col, id_col, bits, "simhash16", fan_out=False)
+    fp = simhash_portable(new_df, text_col, id_col, bits, "simhash16")
     kn = simhash_chunk_rows(fp, bands, bits, id_col, "simhash16").select(
         F.col("__band").alias("band"),
         F.col("__chunk").alias("chunk"),

@@ -4,16 +4,9 @@
 ``streaming/neardup.py`` and ``streaming/excise.py`` complete MinHash
 and span excision.
 
-The batch fingerprint (``dedup.simhash_portable``) aggregates exploded
-token rows (groupBy(id).sum per bit) — a shape append-mode streams
-forbid — so here the fingerprint is a PURE PROJECTION: the token hashes
-stay a bound ARRAY column and each bit's sign-sum is one
-``aggregate(__h, 0, (acc, h) -> acc ± 1)`` fold over it (multiset
-semantics, exactly the batch family's).  Every HOF input is staged as a
-bound column first (the per-element re-evaluation trap —
-``portable_band_keys``' technique).  Fingerprint equality with the
-batch builder, and streaming==batch equality of the full incremental
-check, are asserted in tests/test_streaming.py.
+The batch fingerprint (``dedup.simhash_portable``) is row-local — a
+projection of the staged token-hash array with one fold per pair of
+bits, no aggregate — so the stream runs the batch builder itself.
 
 A document matching a corpus document in BOTH pigeonhole bands emits
 one row per band — the consumer dedups verdicts downstream (sink-side
@@ -27,48 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def simhash_projection(
-    df: DataFrame,
-    bits: int = 24,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "simhash16",
-) -> DataFrame:
-    """STREAMING-SAFE portable SimHash: the exact ``(id, fingerprint)``
-    values of ``dedup.simhash_portable``, computed without aggregations
-    so the same expression tree runs inside a streaming micro-batch.
-    Docs with no tokens are dropped, matching the batch builder (whose
-    explode emits no rows for them)."""
-    from kats_spark.operators.dedup import _P as _PP
-    from kats_spark.operators.dedup import normalize
-    from kats_spark.operators.text import tokens
-
-    staged = df.select(
-        F.col(id_col), tokens(normalize(F.col(text_col))).alias("__t")
-    ).filter(F.size("__t") > 0)
-    # poly hash per token; __t is a bound column so the per-char walk
-    # runs once per token
-    staged = staged.select(
-        F.col(id_col),
-        F.expr(
-            "transform(__t, g -> aggregate(transform(sequence(1, length(g)), "
-            "i -> bigint(ascii(substr(g, i, 1)))), 0L, "
-            f"(h, c) -> (h * 31 + c) % {_PP}))"
-        ).alias("__h"),
-    )
-    val = F.lit(0).cast("bigint")
-    for b in range(bits):
-        s = F.expr(
-            f"aggregate(__h, 0L, (acc, h) -> acc + "
-            f"if(((h >> {b}) & 1) = 1, 1L, -1L))"
-        )
-        bit = F.when(s > 0, F.lit(1).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        val = val + F.shiftleft(bit, b)
-    return staged.select(F.col(id_col), val.alias(out_col))
-
-
 def streaming_incremental_simhash(
     stream: DataFrame,
     corpus_index: DataFrame,
@@ -79,7 +30,7 @@ def streaming_incremental_simhash(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-dup verdicts of a document stream vs the standing corpus:
-    pure-projection fingerprints -> pigeonhole chunk rows (posexplode,
+    row-local fingerprints -> pigeonhole chunk rows (posexplode,
     streaming-legal) -> stream-static equi-join against the saved chunk
     index (``ann_store.save_simhash_index``'s (band, chunk, corpus_id,
     corpus_fp) table) -> exact hamming verify in-stream.  Emits
@@ -88,10 +39,11 @@ def streaming_incremental_simhash(
     from kats_spark.operators.dedup import (
         _check_simhash_bands,
         simhash_chunk_rows,
+        simhash_portable,
     )
 
     _check_simhash_bands(bands, max_hamming, bits)
-    fp = simhash_projection(stream, bits, text_col, id_col)
+    fp = simhash_portable(stream, text_col, id_col, bits, "simhash16")
     kn = simhash_chunk_rows(fp, bands, bits, id_col, "simhash16").select(
         F.col("__band").alias("band"),
         F.col("__chunk").alias("chunk"),

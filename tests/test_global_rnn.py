@@ -362,3 +362,33 @@ def test_global_rnn_ensemble_weights_memo_bit_identical(spark):
     pd.testing.assert_frame_equal(fresh, first)
     pd.testing.assert_frame_equal(fresh, hit)
     cache.clear()
+
+
+def test_q_global_rnn_repeat_call_starts_no_job_before_its_action(spark, count_jobs):
+    """q_global_rnn keys its trained weights on the events fingerprint: the
+    first call collects the window sample and fits, a repeat call builds
+    its frame without a Spark job."""
+    import __spark_entry__ as entry
+    from kats_spark import cache
+
+    q = entry.queries()["global_rnn"]
+    cache.clear()
+    q(spark, "/root/testdata/sf0.001")
+    with count_jobs() as jobs:
+        q(spark, "/root/testdata/sf0.001")
+    assert jobs == []
+    assert cache.stats()["global_rnn_single_weights"] == {"hits": 1, "builds": 1}
+    cache.clear()
+
+
+def test_q_global_rnn_memo_hit_equals_fresh_fit(spark):
+    import __spark_entry__ as entry
+    from kats_spark import cache
+
+    q = entry.queries()["global_rnn"]
+    cache.clear()
+    fresh = sorted(map(tuple, q(spark, "/root/testdata/sf0.001").collect()))
+    hit = sorted(map(tuple, q(spark, "/root/testdata/sf0.001").collect()))
+    assert cache.stats()["global_rnn_single_weights"] == {"hits": 1, "builds": 1}
+    assert hit == fresh
+    cache.clear()

@@ -183,3 +183,19 @@ def test_pq_portable_codes_complete_and_adc_sane(spark):
     top = set(out.vec_id)
     assert all(10 <= v < 20 for v in top)
     assert out.adc_dist.nunique() == 1
+
+
+def test_ivfpq_recall_thread_jobs_land_in_the_callers_job_group(spark, count_jobs):
+    """ivfpq_recall overlaps its query-vector collect and its codebook
+    training with the build in worker threads.  Their jobs inherit the
+    caller's job group, so ``count_jobs`` sees them and no job of the call
+    runs outside a group."""
+    import __spark_entry__ as entry
+
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    with count_jobs() as jobs:
+        entry.queries()["ivfpq_recall"](spark, "/root/testdata/sf0.001").collect()
+    # the status store keeps only the latest jobs, so compare new ids only
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+    assert len(jobs) > 0
